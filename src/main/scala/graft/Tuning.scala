@@ -19,8 +19,8 @@ object Tuning {
     * bounded small — collect_set of <= 64 short mention keys
     * (Canonicalize.pairRows cap) and per-doc span lists — so hash
     * aggregation is safe, and the fallback's per-partition SORT of the
-    * full input was measurably slower (CoocProbe, 1.1M mentions: 0.7-1.3 s
-    * sort-based vs 0.5-0.6 s hash). Respects an explicit user override:
+    * full input was measurably slower (per-passage collect_set over 1.1M
+    * mentions: 0.7-1.3 s sort-based vs 0.5-0.6 s hash). Respects an explicit user override:
     * only the untouched default is raised. Scale-independent: the
     * threshold counts distinct groups per partition, not cores or bytes.
     */

@@ -2,6 +2,8 @@ package graft.corpus
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.LogicalRDD
 import graft.extract.{Canonicalize, Linker}
 import graft.cc.ConnectedComponents
 
@@ -28,9 +30,9 @@ object CrossBook {
     graft.Tuning.ensure(spark)
     val ratioUdf = udf((a: String, b: String) => Linker.indelRatio(a, b))
     // project BEFORE anything heavy: every consumer below needs only
-    // (doc_id, pos, book, node, entity_type) — node is the cleaned key,
-    // and cleanKey is idempotent, so text is never needed again downstream
-    // (guide §2.3 project-early)
+    // (doc_id, pos, book, node, entity_type) — node is the stored cleaned
+    // key that every later step reads, so text is never needed again
+    // downstream (guide §2.3 project-early)
     val mAll = mentions
       .withColumn("book", bookExpr)
       .withColumn("node", Canonicalize.keyOf(mentions))
@@ -38,17 +40,13 @@ object CrossBook {
       .select(Seq(col("doc_id"), col("pos"), col("book"), col("node")) ++
         (if (mAll.columns.contains("entity_type"))
            Seq(col("entity_type")) else Nil): _*)
-    // pin only when the mention table is consumed more than once below:
-    // with an externally pinned cooc table (q37 — whose mention input is
-    // the already-checkpointed linked stage) the only full pass left is
-    // the `grouped` aggregate, and an eager checkpoint of the full table
-    // would cost more than the single scan it saves (measured round-6:
-    // the q37 pin was 0.5-1 s of pure overhead). Without one (q51 — whose
-    // mention input is synthesized per query) the pin still pays for
-    // itself: cooc + grouped would otherwise each re-run the synthesis
-    // and the cleanKey regex chain.
-    val m =
-      if (pinnedCoocEdges.isDefined) mProj else mProj.localCheckpoint(true)
+    // pin only a lazy mention input: cooc + grouped below would each
+    // re-run its whole lineage (q51 synthesizes its mentions per query).
+    // An already-materialized input (q37 passes the checkpointed linked
+    // stage) is re-read, not recomputed, and an eager checkpoint of the
+    // full table costs more than the scans it saves (measured round-6:
+    // the q37 pin was 0.5-1 s of pure overhead)
+    val m = if (isMaterialized(mentions)) mProj else mProj.localCheckpoint(true)
     val typed =
       if (m.columns.contains("entity_type")) m
       else m.withColumn("entity_type", lit("unknown"))
@@ -141,6 +139,17 @@ object CrossBook {
           lit(0L)).as("type_conflicts"))
     (entities, assignment)
   }
+
+  /** Whether `df` is already materialized: its plan reads only
+    * checkpointed or local rows through projections and filters, so a
+    * second scan re-reads those rows instead of recomputing a lineage.
+    */
+  private[corpus] def isMaterialized(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.find {
+      case _: LogicalRDD | _: LocalRelation | _: Project | _: Filter |
+          _: SubqueryAlias => false
+      case _ => true
+    }.isEmpty
 
   /** X4 book_clusters map (resolver.py:22-66): per cross-book entity, the
     * per-book representative member (min node key within the book — the

@@ -47,7 +47,7 @@ object Canonicalize {
     * cheap `contains` scans on the overwhelming majority of passages
     * that mention no alias construction — at corpus scale the alias
     * regex pass over every passage was ~30% of the cluster-edge build
-    * (EdgeProbe, rep-16: 2.96 s of ~10.6 s).
+    * (rep-16 corpus: 2.96 s of ~10.6 s).
     */
   def aliasPairs(spark: SparkSession, textualPassages: DataFrame): DataFrame = {
     import spark.implicits._
@@ -97,8 +97,8 @@ object Canonicalize {
   /** The per-passage pair expansion feeding [[cooccurrence]] — one row per
     * (passage, unordered key pair). `keyExpr` lets callers that already
     * carry a cleaned key column (CrossBook's pinned mention table) skip
-    * the per-row cleanKey regex re-derivation; cleanKey is idempotent, so
-    * passing the precomputed column is exact.
+    * the per-row cleanKey re-derivation; the stored column IS
+    * cleanKey(text), so passing it is exact.
     */
   private[graft] def pairRows(
       mentions: DataFrame, maxKeysPerPassage: Int,
@@ -177,21 +177,21 @@ object Canonicalize {
       .filter(col("cnt") >= 3)
       .select("src", "dst")
 
-  /** Build the full alias-similarity edge set over mention keys.
-    * `pinnedNodes`: an already-materialized distinct node table — callers
-    * that also need the node set (CC seeding) pass theirs so the
-    * full-mention-table distinct shuffle runs exactly once.
-    */
   /** Mention-key expression for a mention table: the pre-materialized
     * `mkey` column when present (Pipeline.mentions stores it with the
-    * stage — cleanKey costs ~2 s per full-table evaluation at sf0.1),
-    * else the cleanKey derivation. cleanKey is deterministic, so the two
-    * are interchangeable.
+    * stage, so consumers skip a per-row cleanKey pass over the full
+    * table), else the cleanKey derivation. The stored column is
+    * cleanKey(text), so the two are interchangeable.
     */
   private[graft] def keyOf(mentions: DataFrame): org.apache.spark.sql.Column =
     if (mentions.columns.contains("mkey")) col("mkey")
     else Linker.cleanKey(col("text"))
 
+  /** Build the full alias-similarity edge set over mention keys.
+    * `pinnedNodes`: an already-materialized distinct node table — callers
+    * that also need the node set (CC seeding) pass theirs so the
+    * full-mention-table distinct shuffle runs exactly once.
+    */
   def edges(
       spark: SparkSession,
       textualPassages: DataFrame,
@@ -274,59 +274,34 @@ object Canonicalize {
   }
 
   /** D8 dynamic-registry resolve (dynamic_resolver.py:352-389): resolve
-    * free text against a post-CC assignment — exact key (conf 1.0) ->
-    * article-stripped (0.95) -> best fuzzy >= 0.85 (conf = ratio). The
-    * registry side is broadcast; adds (cluster, resolve_confidence) to the
-    * input, nulls when unresolved.
+    * free text against a post-CC assignment with the [[LocalLinker]]
+    * cascade — exact key (conf 1.0) -> article-stripped (0.95) -> best
+    * fuzzy >= 0.85 (conf = ratio), fuzzy ties to the smaller cluster. The
+    * registry (node -> cluster, O(distinct mention keys)) is broadcast and
+    * probed per row, so every input row keeps its own row, duplicates
+    * included. Adds (cluster, resolve_confidence), nulls when unresolved.
     */
   def resolve(
       spark: SparkSession,
       texts: DataFrame,
       assignment: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ratioUdf = udf((a: String, b: String) => Linker.indelRatio(a, b))
-    val reg = broadcast(assignment.select(
-      col("node").as("rkey"), col("cluster").as("rcluster")))
-    // resolve DISTINCT cleaned keys, then join the verdicts back onto the
-    // full input — duplicate input texts must each keep their row (the
-    // round-2 qkey-window dropped all but one row per distinct key,
-    // ADVICE r02 medium), and the expensive fuzzy tier runs once per key
-    // instead of once per row.
-    val m = texts.withColumn("qkey", Linker.cleanKey(col("text")))
-    val keys = m.select("qkey").distinct()
-      .withColumn("qkey2", Linker.stripArticle(col("qkey")))
-
-    val t1 = keys.join(reg, col("qkey") === col("rkey"), "left")
-    val hit1 = t1.filter(col("rcluster").isNotNull)
-      .withColumn("resolve_confidence", lit(1.0))
-    val miss1 = t1.filter(col("rcluster").isNull).drop("rkey", "rcluster")
-
-    val t2 = miss1.join(reg, col("qkey2") === col("rkey"), "left")
-    val hit2 = t2.filter(col("rcluster").isNotNull)
-      .withColumn("resolve_confidence", lit(0.95))
-    val miss2 = t2.filter(col("rcluster").isNull).drop("rkey", "rcluster")
-
-    val cand = miss2.join(reg,
-        substring(col("qkey"), 1, 1) === substring(col("rkey"), 1, 1) &&
-          abs(length(col("qkey")) - length(col("rkey"))) <= 3, "left")
-      .withColumn("ratio",
-        when(col("rkey").isNotNull, ratioUdf(col("qkey"), col("rkey"))))
-      .withColumn("ok", col("ratio") >= 0.85)
-    val w = Window.partitionBy("qkey")
-      .orderBy(col("ok").desc_nulls_last, col("ratio").desc_nulls_last,
-        col("rcluster").asc_nulls_last)
-    val t3 = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .withColumn("rcluster",
-        when(col("ok").isNotNull && col("ok"), col("rcluster")))
-      .withColumn("resolve_confidence",
-        when(col("ok").isNotNull && col("ok"), col("ratio")))
-      .drop("rn", "ratio", "ok")
-
-    val resolved = hit1.unionByName(hit2)
-      .unionByName(t3, allowMissingColumns = false)
-      .select(col("qkey"), col("rcluster").as("cluster"),
-        col("resolve_confidence"))
-    m.join(resolved, Seq("qkey"), "left").drop("qkey")
+    import spark.implicits._
+    // each node is a registry entry whose id is its cluster
+    val registry = assignment.select("node", "cluster").as[(String, String)]
+      .collect().map { case (node, cluster) =>
+        SeedEntity(cluster, node, Nil, null)
+      }
+    val lk = spark.sparkContext.broadcast(new LocalLinker(registry.toSeq))
+    // no distinct-key pass: a fuzzy miss costs one ratio per key in its
+    // first-char block, and this registry holds every post-CC node, so the
+    // cost grows with input rows x block size. A caller with many repeated
+    // texts should resolve the distinct texts and join the verdicts back.
+    val verdict = udf((text: String) =>
+      lk.value.lookup(text).map(l => (l.id, l.confidence)))
+    texts.withColumn("resolved__", verdict(col("text")))
+      .select(texts.columns.map(col).toIndexedSeq ++ Seq(
+        col("resolved__._1").as("cluster"),
+        col("resolved__._2").as("resolve_confidence")): _*)
   }
 
   /** Cluster registry: representative name = first-seen mention text by

@@ -1,22 +1,16 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Seeded entity linking (reference EntityDatabase.lookup / EntityResolver,
-  * extract/resolver.py:72-257), re-expressed as a broadcast-join cascade:
-  *
-  *   tier 1  exact key            — broadcast HASH join, conf 1.0
-  *   tier 2  article-stripped key — broadcast hash join, conf 0.95
-  *   tier 3  fuzzy                — broadcast candidate join blocked by
-  *           (first char, |len diff| <= 3), similarity = rapidfuzz-exact
-  *           indel ratio >= 0.85, conf = ratio (resolver.py:91-105)
-  *
-  * The build side (the seed registry) is tiny and broadcast, so the probe
-  * side never shuffles — head-entity skew (one protagonist dominating
-  * mention counts) cannot concentrate on a single reducer here. Downstream
-  * aggregations rely on partial aggregation + AQE; see graft.Spark.session.
+  * extract/resolver.py:72-257) as DataFrame adapters over [[LocalLinker]],
+  * which holds the only implementation of key cleaning, article stripping,
+  * the exact -> article-stripped -> fuzzy cascade and type inference. The
+  * seed registry is broadcast and probed per row inside one projection —
+  * the probe side never shuffles, so head-entity skew (one protagonist
+  * dominating mention counts) cannot concentrate on a single reducer.
   */
 object Linker {
 
@@ -47,142 +41,50 @@ object Linker {
     2.0 * prev(t.length) / (s.length + t.length)
   }
 
-  /** Mention-text cleaning (resolver.py:213-221): collapse whitespace,
-    * strip possessive 's.
-    */
-  def cleanKey(c: Column): Column =
-    // final trim AFTER the possessive strip, like the reference
-    // (resolver.py:213-221 ends with .strip()) and LocalLinker.cleanKey —
-    // "Frodo 's" must clean to "frodo", not "frodo " (round-5 review: the
-    // trailing space missed the exact tiers and fell to fuzzy, so the
-    // fused and join linkers produced different confidences)
-    lower(trim(regexp_replace(regexp_replace(trim(c), """\s+""", " "), "'s$", "")))
+  /** [[LocalLinker.cleanKey]] as a column function (null stays null). */
+  val cleanKey: UserDefinedFunction =
+    udf((s: String) => if (s == null) null else LocalLinker.cleanKey(s))
 
-  /** Article strip (resolver.py:85-89). */
-  def stripArticle(c: Column): Column =
-    regexp_replace(c, "^(the |a |an )", "")
-
-  /** Scala-side twin of [[inferType]] for fused mapPartitions stages. */
-  def inferTypeLocal(label: String, text: String): String = label match {
-    case "PERSON" | "ORG" => "character"
-    case "PLACE" => "place"
-    case "OBJECT" => "object"
-    case "EVENT" => "event"
-    case _ =>
-      val l = text.toLowerCase(java.util.Locale.ROOT)
-      if (graft.Lexicon.PlaceIndicators.exists(l.contains)) "place"
-      else if (graft.Lexicon.ObjectIndicators.exists(l.contains)) "object"
-      else "unknown"
-  }
-
-  /** Type inference for unlinked mentions (resolver.py:223-257). */
-  def inferType(label: Column, text: Column): Column = {
-    val lower_ = lower(text)
-    val placeHit = graft.Lexicon.PlaceIndicators
-      .map(k => lower_.contains(k)).reduce(_ || _)
-    val objectHit = graft.Lexicon.ObjectIndicators
-      .map(k => lower_.contains(k)).reduce(_ || _)
-    when(label === "PERSON", "character")
-      .when(label === "PLACE", "place")
-      .when(label === "OBJECT", "object")
-      .when(label === "EVENT", "event")
-      .when(label === "ORG", "character")
-      .when(placeHit, "place")
-      .when(objectHit, "object")
-      .otherwise("unknown")
-  }
-
-  /** The 3-tier lookup cascade over a DISTINCT key table
-    * (one column `mkey`): exact (conf 1.0) -> article-stripped (0.95) ->
-    * blocked fuzzy (conf = ratio >= 0.85). Returns exactly one verdict
-    * row per input key: (mkey, akey, canonical_id, canonical_name,
-    * entity_type, link_confidence) — null id/conf when unresolved.
-    */
-  private def linkKeys(
-      spark: SparkSession,
-      keys: DataFrame,
-      alias: DataFrame): DataFrame = {
-    val ratioUdf = udf((a: String, b: String) => indelRatio(a, b))
-    val k = keys.withColumn("mkey2", stripArticle(col("mkey")))
-
-    // tier 1: exact (akey is unique in the registry -> <=1 match per key)
-    val t1 = k.join(alias, col("mkey") === col("akey"), "left")
-    val hit1 = t1.filter(col("canonical_id").isNotNull)
-      .withColumn("link_confidence", lit(1.0))
-    val miss1 = t1.filter(col("canonical_id").isNull)
-      .drop("akey", "canonical_id", "entity_type", "canonical_name")
-
-    // tier 2: article-stripped
-    val t2 = miss1.join(alias, col("mkey2") === col("akey"), "left")
-    val hit2 = t2.filter(col("canonical_id").isNotNull)
-      .withColumn("link_confidence", lit(0.95))
-    val miss2 = t2.filter(col("canonical_id").isNull)
-      .drop("akey", "canonical_id", "entity_type", "canonical_name")
-
-    // tier 3: blocked fuzzy; best candidate per key by (ratio desc,
-    // id asc) — deterministic
-    val cand = miss2.join(
-      alias,
-      substring(col("mkey"), 1, 1) === substring(col("akey"), 1, 1) &&
-        abs(length(col("mkey")) - length(col("akey"))) <= 3,
-      "left")
-      .withColumn("ratio",
-        when(col("akey").isNotNull, ratioUdf(col("mkey"), col("akey"))))
-      .withColumn("fuzzy_ok", col("ratio") >= 0.85)
-    val w = Window.partitionBy("mkey")
-      .orderBy(col("fuzzy_ok").desc_nulls_last, col("ratio").desc_nulls_last,
-        col("canonical_id").asc_nulls_last)
-    val t3 = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .withColumn("matched", col("fuzzy_ok").isNotNull && col("fuzzy_ok"))
-      .select(col("mkey"), col("mkey2"),
-        col("akey"),
-        when(col("matched"), col("canonical_id")).as("canonical_id"),
-        when(col("matched"), col("canonical_name")).as("canonical_name"),
-        when(col("matched"), col("entity_type")).as("entity_type"),
-        when(col("matched"), col("ratio")).as("link_confidence"))
-
-    hit1.unionByName(hit2).unionByName(t3, allowMissingColumns = false)
-      .drop("mkey2")
-  }
+  /** [[LocalLinker.stripArticle]] as a column function (null stays null). */
+  val stripArticle: UserDefinedFunction =
+    udf((s: String) => if (s == null) null else LocalLinker.stripArticle(s))
 
   /** Link mentions against a seed registry. Adds columns:
     * canonical_id, canonical_name, entity_type, link_confidence, is_new.
     *
-    * The whole lookup cascade is a function of the CLEANED KEY alone, so
-    * it runs over the distinct key table (sub-linear in the corpus — the
-    * same boundedness assumption the CC node set already makes) and the
-    * verdicts are broadcast back onto the mention rows: ONE scan of the
-    * mention table and one map-side join, where the previous three-branch
-    * union re-scanned the mention table (re-deriving the cleanKey
-    * regexes) once per tier and shuffled the unmatched branch through a
-    * per-mention window (round-6; LinkerSpec pins verdict equivalence,
-    * q04/q05 stay oracle-green). Only the per-row pieces — is_new and the
-    * type inference for unlinked mentions, which need label/text — stay
-    * row-level.
+    * Each row's cleaned key (the stored `mkey` column when the input
+    * carries one — Pipeline.mentions stores it with the stage — else
+    * cleanKey(text)) is resolved by a broadcast [[LocalLinker]] inside ONE
+    * projection: one scan of the mention table, no shuffle and no join.
+    * mkey is kept in the output: downstream consumers of the linked stage
+    * (the cross-book resolver) reuse it as the node key.
     */
   def link(
       spark: SparkSession,
       mentions: DataFrame,
       seeds: Seq[SeedEntity] = Seeds.default): DataFrame = {
-    val alias = broadcast(Seeds.toDf(spark, seeds))
-    // reuse a pre-materialized key column when the input carries one
-    // (Pipeline.mentions stores it with the stage)
+    val lk = spark.sparkContext.broadcast(new LocalLinker(seeds))
+    // an unresolved key gets the inferred type and confidence 0.0
+    val verdict = udf { (key: String, label: String, text: String) =>
+      lk.value.resolveKey(key) match {
+        case Some(l) => (l.id, l.entityType, l.name, l.confidence)
+        case None =>
+          (null: String, LocalLinker.inferType(label, text), null: String, 0.0)
+      }
+    }.asNonNullable()
     val m =
       if (mentions.columns.contains("mkey")) mentions
       else mentions.withColumn("mkey", cleanKey(col("text")))
-    val verdicts = linkKeys(spark, m.select("mkey").distinct(), alias)
-
-    // exactly one verdict row per distinct key -> inner join attaches
-    // without duplicating or dropping mention rows
-    m.join(broadcast(verdicts.drop("akey")), Seq("mkey"))
-      .withColumn("is_new", col("canonical_id").isNull)
-      .withColumn("entity_type",
-        when(col("is_new"), inferType(col("label"), col("text")))
-          .otherwise(col("entity_type")))
-      .withColumn("link_confidence",
-        coalesce(col("link_confidence"), lit(0.0)))
-    // mkey intentionally KEPT in the output: downstream consumers of the
-    // linked stage (the cross-book resolver) reuse it as the node key
-    // instead of re-deriving the cleanKey regex chain per row
+    // the verdict struct is computed once per row: Catalyst does not
+    // collapse a non-cheap UDF into each of the field extractions below
+    // (LinkerSpec pins one verdict UDF in the optimized plan)
+    m.withColumn("verdict__", verdict(col("mkey"), col("label"), col("text")))
+      .select(Seq(col("mkey")) ++ m.columns.filter(_ != "mkey").map(col) ++
+        Seq(
+          col("verdict__._1").as("canonical_id"),
+          col("verdict__._2").as("entity_type"),
+          col("verdict__._3").as("canonical_name"),
+          col("verdict__._4").as("link_confidence"),
+          col("verdict__._1").isNull.as("is_new")): _*)
   }
 }

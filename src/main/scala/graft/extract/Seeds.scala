@@ -29,16 +29,15 @@ object Seeds {
   }
 
   /** Exploded lookup rows: (akey = lowercase name-or-alias, id, type, name).
-    * This is the broadcast build side of every linking join.
+    * This is the registry both lookup surfaces build from: the
+    * [[LocalLinker]] index (behind every linking entry point) and the
+    * mention Gazetteer.
     *
     * ONE row per alias key, last registration wins — the reference's alias
     * index is a dict built in registry order (resolver.py:60-70:
     * `_alias_to_id[alias_lower] = entity.id` overwrites), so when two
     * seeds share an alias the later seed owns the key. Deduping HERE keeps
-    * the three lookup surfaces (Linker's joins, LocalLinker's map, the
-    * mention Gazetteer) on identical semantics — an un-deduped build side
-    * would emit one JOIN ROW per colliding seed and silently duplicate
-    * mentions downstream (round-5 review).
+    * the two surfaces on identical semantics (round-5 review).
     */
   def aliasRows(seeds: Seq[SeedEntity]): Seq[(String, String, String, String)] = {
     val rows = seeds.flatMap { e =>
@@ -74,11 +73,6 @@ object Seeds {
         r.getString(0), r.getString(1),
         Option(r.getSeq[String](2)).getOrElse(Nil), entityType))
       .toSeq
-  }
-
-  def toDf(spark: SparkSession, seeds: Seq[SeedEntity]): DataFrame = {
-    import spark.implicits._
-    aliasRows(seeds).toDF("akey", "canonical_id", "entity_type", "canonical_name")
   }
 
   /** D10/S6: export a cluster registry back to the reference's seed-JSON

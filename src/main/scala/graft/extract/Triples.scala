@@ -2,7 +2,6 @@ package graft.extract
 
 import java.util.regex.Pattern
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.Lexicon
 
 /** An extracted (subj, pred, obj) triple.
@@ -22,9 +21,12 @@ final case class Triple(
     confidence: Double,
     extraction_method: String)
 
-/** SVO triple extraction — the second mapPartitions-vectorized stage of the
-  * north rule. Deterministic re-expression of the reference's
-  * dependency-parse path (extract/relationships.py:161-276) without spaCy:
+/** SVO triple extraction: ONE narrow mapPartitions over passages detects
+  * mentions, links them through the [[LocalLinker]] cascade and extracts
+  * triples ([[Triples.fromPassagesFused]] — the only extractor; the
+  * queries, the materialization job and the bench all run it).
+  * Deterministic re-expression of the reference's dependency-parse path
+  * (extract/relationships.py:161-276) without spaCy:
   *
   *  - verb = token whose lowercase form is in the verb lexicon
   *    (lemma AND surface forms, Lexicon.VerbToRelationship)
@@ -89,14 +91,9 @@ object Triples {
       if (byKey(i)._1 == t) return Some(byKey(i)._2)
       i += 1
     }
-    // article-strip tier: replaceFirst-equivalent prefix ladder (the three
-    // prefixes are mutually exclusive)
-    val s =
-      if (t.startsWith("the ")) t.substring(4)
-      else if (t.startsWith("an ")) t.substring(3)
-      else if (t.startsWith("a ")) t.substring(2)
-      else null
-    if (s != null) {
+    // article-strip tier
+    val s = LocalLinker.stripArticle(t)
+    if (s != t) {
       i = 0
       while (i < byKey.length) {
         if (byKey(i)._1 == s) return Some(byKey(i)._2)
@@ -283,11 +280,12 @@ object Triples {
     out.values.toSeq
   }
 
-  /** FUSED hot path: detection + SVO extraction + broadcast-index linking
-    * in ONE narrow mapPartitions over passages — zero shuffles before the
-    * edge aggregate. This is the 100 TB shape: scan -> narrow extract ->
-    * partial-agg. Linking semantics are identical to the join-cascade
-    * Linker (LocalLinker; asserted by LinkerSpec).
+  /** The triple extractor: detection + SVO extraction + broadcast-index
+    * linking in ONE narrow mapPartitions over passages — zero shuffles
+    * before the edge aggregate. This is the 100 TB shape: scan -> narrow
+    * extract -> partial-agg. Linking is the [[LocalLinker]] cascade that
+    * also backs the `linked` stage, so a mention's id and type here match
+    * its Linker.link verdict (LinkerSpec).
     */
   def fromPassagesFused(
       spark: SparkSession,
@@ -307,13 +305,14 @@ object Triples {
           if (raw.size < 2) Iterator.empty // T7 gate
           else {
             val args = raw.map { r =>
-              val linked = lk.lookup(r.text)
-              // on lookup miss, infer the type like the join path does
-              // (Linker.link's is_new branch) — fused/join type parity
-              Arg(r.text, r.start, r.end,
-                linked.map(_._1),
-                linked.map(_._2)
-                  .orElse(Some(Linker.inferTypeLocal(r.label, r.text))))
+              lk.lookup(r.text) match {
+                case Some(l) =>
+                  Arg(r.text, r.start, r.end, Some(l.id), Some(l.entityType))
+                // on a miss, infer the type as Linker.link's is_new rows do
+                case None =>
+                  Arg(r.text, r.start, r.end, None,
+                    Some(LocalLinker.inferType(r.label, r.text)))
+              }
             }
             extract(text, args).iterator.map {
               case (st, pred, se, ot, oe, rawVerb) =>
@@ -323,42 +322,6 @@ object Triples {
                   ot, oe.flatMap(_.id), oe.flatMap(_.etype),
                   0.7, "svo")
             }
-          }
-        }
-      }
-  }
-
-  /** Join-based variant (one co-partitioned shuffle to collect the
-    * per-passage mention set, then a narrow mapPartitions); kept for
-    * pipelines that already materialized linked mentions.
-    */
-  def fromPassages(
-      spark: SparkSession,
-      passages: DataFrame,
-      linkedMentions: DataFrame): Dataset[Triple] = {
-    import spark.implicits._
-    val perPassage = linkedMentions
-      .groupBy("doc_id", "pos")
-      .agg(collect_list(struct(
-        col("text"), col("start"), col("end"),
-        col("canonical_id"), col("entity_type"))).as("ments"))
-      .filter(size(col("ments")) >= 2)
-
-    passages
-      .select("doc_id", "pos", "passage_id", "text")
-      .join(perPassage, Seq("doc_id", "pos"))
-      .select(col("doc_id"), col("pos"), col("passage_id"), col("text"),
-        col("ments"))
-      .as[(String, Int, String, String, Seq[(String, Int, Int, Option[String], Option[String])])]
-      .mapPartitions { it =>
-        it.flatMap { case (docId, pos, pid, text, ments) =>
-          val args = ments.map(m => Arg(m._1, m._2, m._3, m._4, m._5))
-          extract(text, args).map { case (st, pred, se, ot, oe, raw) =>
-            Triple(docId, pos, pid,
-              st, se.flatMap(_.id), se.flatMap(_.etype),
-              pred, raw,
-              ot, oe.flatMap(_.id), oe.flatMap(_.etype),
-              0.7, "svo")
           }
         }
       }

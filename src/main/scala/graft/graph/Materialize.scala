@@ -50,7 +50,7 @@ object Materialize {
     val lk = spark.sparkContext.broadcast(
       new graft.extract.LocalLinker(graft.extract.Seeds.default))
     udf((speaker: String) =>
-      lk.value.lookup(speaker).map(_._1).getOrElse(
+      lk.value.lookup(speaker).map(_.id).getOrElse(
         "char_" + speaker.toLowerCase(java.util.Locale.ROOT).replaceAll("[^a-z0-9]+", "_")))
   }
 
@@ -400,7 +400,7 @@ object Materialize {
       graft.extract.Linker.link(spark, mentions)
     }
     val triples = ck.stage("triples") {
-      graft.extract.Triples.fromPassages(spark, passages, linked).toDF()
+      graft.extract.Triples.fromPassagesFused(spark, passages).toDF()
     }
     ck.stage("clusters") {
       // supersteps persist through the checkpoint table (cc_edges, cc_sym,

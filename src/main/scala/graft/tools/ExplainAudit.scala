@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Diagnostic main: print the formatted physical plan of named queries
@@ -20,12 +19,7 @@ object ExplainAudit {
       sys.exit(2)
     }
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession("graft-explain-audit", 4)
     args.drop(1).foreach { q =>
       println(s"========== $q ==========")
       SparkEntry.queries(q)(spark, sfDir).explain("formatted")

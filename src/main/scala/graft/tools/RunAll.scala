@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drive the full checkpointed materialization job (graph.Materialize
   * .runAll) end-to-end — the long-job surface the query entry points
   * don't exercise at scale. Prints per-stage progress via the checkpoint
@@ -23,16 +21,10 @@ object RunAll {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val wh = if (args.length > 1) args(1) else "/tmp/graft_warehouse"
-    val cpus = if (args.length > 2) args(2) else "32"
     val rep = if (args.length > 3) args(3).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      if (args.length > 2) ToolSession("graft-runall", args(2).toInt)
+      else ToolSession("graft-runall")
     val t0 = System.nanoTime()
     val edges = graft.graph.Materialize.runAllReplicated(spark, sfDir, wh, rep)
     val n = edges.count()

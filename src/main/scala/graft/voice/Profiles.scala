@@ -10,19 +10,15 @@ import org.apache.spark.sql.expressions.Window
   */
 object Profiles {
 
-  /** V6 distinctive words: TF / (1 + other-speaker-usage / n_speakers),
-    * min count 2, top N per speaker (profile.py:280-316). One shuffle to
-    * (speaker, word) counts; the per-word speaker document frequency is a
-    * second small aggregate; ranking is a window.
-    */
   /** Per-(speaker, word) occurrence counts over the dialogue lines — the
     * one full-dialogue explode + aggregate pass both word-ranking queries
-    * start from. Tokens are split(lower(quote), "\s+") with empty tokens
-    * kept: [[distinctiveWords]] and [[topWords]] each filter by their own
-    * length threshold, and an empty token can never pass either, so this
-    * table is exactly equivalent to both queries' inline tokenizations
-    * (with and without trim — trimming only changes empty tokens).
-    * Pipeline caches it per session so q33 and q42 share one pass.
+    * start from. Tokens are split(lower(quote), "\s+"), and empty tokens
+    * are dropped here. That is safe: [[distinctiveWords]] and [[topWords]]
+    * each filter by their own length threshold, which no empty token
+    * passes, so this table is exactly equivalent to both queries' inline
+    * tokenizations (with and without trim — trimming only changes empty
+    * tokens). Pipeline caches it per session so q33 and q42 share one
+    * pass.
     */
   def wordCounts(dialogue: DataFrame): DataFrame =
     dialogue
@@ -33,6 +29,11 @@ object Profiles {
       .groupBy("speaker", "word")
       .agg(count(lit(1)).as("cnt"))
 
+  /** V6 distinctive words: TF / (1 + other-speaker-usage / n_speakers),
+    * min count 2, top N per speaker (profile.py:280-316). One shuffle to
+    * (speaker, word) counts; the per-word speaker document frequency is a
+    * second small aggregate; ranking is a window.
+    */
   def distinctiveWords(dialogue: DataFrame, topN: Int = 10): DataFrame =
     distinctiveWordsFromCounts(wordCounts(dialogue).localCheckpoint(true), topN)
 

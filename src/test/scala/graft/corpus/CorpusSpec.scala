@@ -32,6 +32,46 @@ class CorpusSpec extends SparkSpec {
     assert(bc("gondor").size == 2)
   }
 
+  /** The X4 fixture mentions behind a lazy plan (an explode, like q51's
+    * synthesized mentions), and their (books_appeared, type_conflicts). */
+  private def lazyMentions = {
+    import spark.implicits._
+    Seq(("d0", 0, "Gondor", "place"), ("d1", 0, "Gondor", "character"),
+      ("d2", 0, "Bree", "place"))
+      .toDF("doc_id", "pos", "t", "et")
+      .select(col("doc_id"), col("pos"),
+        explode(array(struct(col("t").as("text"), col("et").as("entity_type"))))
+          .as("mn"))
+      .select(col("doc_id"), col("pos"), col("mn.text").as("text"),
+        col("mn.entity_type").as("entity_type"))
+  }
+
+  private def crossBookEntities(mentions: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val passages = Seq(("d1", 0, "x")).toDF("doc_id", "pos", "text")
+    CrossBook.resolveAll(spark, passages, mentions,
+      pmod(substring(col("doc_id"), 2, 9).cast("long"), lit(4L)))
+      ._1.collect()
+      .map(r => r.getString(0) ->
+        ((r.getAs[Long]("books_appeared"), r.getAs[Long]("type_conflicts"))))
+      .toMap
+  }
+
+  private val crossBookExpected = Map("gondor" -> ((2L, 1L)), "bree" -> ((1L, 0L)))
+
+  test("X4 resolveAll, materialized mention input: re-read, not pinned again") {
+    val checkpointed = lazyMentions.localCheckpoint(true)
+    assert(CrossBook.isMaterialized(checkpointed))
+    assert(CrossBook.isMaterialized(
+      checkpointed.withColumn("book", lit(0L)).filter(col("pos") >= 0)))
+    assert(crossBookEntities(checkpointed) == crossBookExpected)
+  }
+
+  test("X4 resolveAll, lazy mention input: pinned once, same entities") {
+    assert(!CrossBook.isMaterialized(lazyMentions))
+    assert(crossBookEntities(lazyMentions) == crossBookExpected)
+  }
+
   test("X7/S8: per-book stats, corpus totals, catalog round-trip") {
     import spark.implicits._
     val passages = Seq(
@@ -77,5 +117,21 @@ class CorpusSpec extends SparkSpec {
     val g = out("Gandaf")
     assert(g._1.contains("gandalf") && g._2.exists(c => c >= 0.85 && c < 1.0))
     assert(out("Zorro") == ((None, None)))
+  }
+
+  test("D8 resolve: duplicate input texts each keep their own row") {
+    import spark.implicits._
+    val assignment = Seq(
+      ("gandalf", "gandalf"), ("mithrandir", "gandalf"), ("bree", "bree"))
+      .toDF("node", "cluster")
+    val texts = Seq(("Gandalf", 1), ("Gandalf", 2), ("Gandaf", 3),
+      ("Gandaf", 4), ("Zorro", 5), ("Zorro", 6)).toDF("text", "id")
+    val out = graft.extract.Canonicalize.resolve(spark, texts, assignment)
+      .collect()
+      .map(r => r.getAs[Int]("id") -> Option(r.getAs[String]("cluster")))
+      .sortBy(_._1).toSeq
+    assert(out.map(_._1) == (1 to 6))
+    assert(out.map(_._2) == Seq(Some("gandalf"), Some("gandalf"),
+      Some("gandalf"), Some("gandalf"), None, None))
   }
 }

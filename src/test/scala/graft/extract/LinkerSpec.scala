@@ -80,31 +80,68 @@ class LinkerSpec extends SparkSpec {
     assert(math.abs(Linker.indelRatio("abcd", "abxd") - 2.0 * 3 / 8) < 1e-12)
   }
 
-  test("LocalLinker agrees with the join-cascade Linker key-for-key") {
+  private def mentionRows(texts: Seq[String]) = {
     import spark.implicits._
+    texts.zipWithIndex.map { case (t, i) =>
+      ("d", i, "p", t, i * 100, i * 100 + t.length, "PERSON", "heuristic", 0.7)
+    }.toDF("doc_id", "pos", "passage_id", "text", "start", "end",
+      "label", "source", "confidence")
+  }
+
+  test("Linker.link agrees with LocalLinker.lookup row for row") {
     val local = new LocalLinker(fixtureSeeds)
-    val keys = Seq("Gandalf", "Mithrandir", "the Shire", "the Mithrandir",
+    val texts = Seq("Gandalf", "Mithrandir", "the Shire", "the Mithrandir",
       "Gandaf", "Tom Bombadil", "Gandalf's", "Bilbo", "Smeagol", "Bag End",
       "Gollum", "gOlLum", "Mr. Baggins", "Shire",
       // separated possessive: the 's strip leaves a trailing space that
-      // the final trim must remove on BOTH linkers (round-5 review: the
-      // SQL cleanKey skipped the reference's ending .strip(), so this key
-      // hit the exact tier locally but the fuzzy tier in the join)
-      "Gandalf 's")
-    val viaJoin = {
-      val m = keys.zipWithIndex.map { case (t, i) =>
-        ("d", 0, "p", t, i * 100, i * 100 + t.length, "PERSON", "heuristic", 0.7)
-      }.toDF("doc_id", "pos", "passage_id", "text", "start", "end",
-        "label", "source", "confidence")
-      Linker.link(spark, m, fixtureSeeds)
-        .select("text", "canonical_id", "link_confidence")
-        .collect().map(r => r.getString(0) ->
-          ((Option(r.getString(1)), r.getDouble(2)))).toMap
+      // the final trim must remove (round-5 review)
+      "Gandalf 's",
+      // non-space whitespace at either end and inside the key
+      "Gandalf's\t", "\nMithrandir\n", "Bag\tEnd",
+      // duplicates each keep their own row and verdict
+      "Gandaf", "Zorro", "Zorro", "the Great Forest")
+    val out = Linker.link(spark, mentionRows(texts), fixtureSeeds)
+      .select("pos", "text", "canonical_id", "entity_type",
+        "canonical_name", "link_confidence", "is_new")
+      .collect()
+    assert(out.map(_.getInt(0)).sorted.toSeq == texts.indices)
+    out.foreach { r =>
+      val t = r.getString(1)
+      val want = local.lookup(t) match {
+        case Some(l) => (l.id, l.entityType, l.name, l.confidence, false)
+        case None => (null, LocalLinker.inferType("PERSON", t), null, 0.0, true)
+      }
+      val got = (r.getString(2), r.getString(3), r.getString(4),
+        r.getDouble(5), r.getBoolean(6))
+      assert(got == want, s"row ${r.getInt(0)} ($t)")
     }
-    keys.foreach { k =>
-      val l = local.lookup(k)
-      assert(viaJoin(k)._1 == l.map(_._1), s"id mismatch for $k")
-      assert(viaJoin(k)._2 == l.map(_._4).getOrElse(0.0), s"conf mismatch for $k")
+  }
+
+  test("Linker.link runs the cascade once per row: one verdict UDF in the " +
+    "optimized plan, not one per output column") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    // a checkpointed input: a local relation would be folded into constants
+    val input = mentionRows(Seq("Gandalf")).localCheckpoint(true)
+    val plan = Linker.link(spark, input, fixtureSeeds)
+      .queryExecution.optimizedPlan
+    val verdictUdfs = plan.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case u: ScalaUDF if u.children.size == 3 => u })
+    assert(verdictUdfs.size == 1, plan.toString)
+  }
+
+  test("trailing tab or newline: Linker.link and LocalLinker.lookup both " +
+    "link Gandalf's at 1.0") {
+    val local = new LocalLinker(fixtureSeeds)
+    val texts = Seq("Gandalf's\t", "Gandalf's\n")
+    val out = Linker.link(spark, mentionRows(texts), fixtureSeeds)
+      .select("text", "canonical_id", "link_confidence").collect()
+    assert(out.length == texts.size)
+    out.foreach { r =>
+      val t = r.getString(0)
+      assert((r.getString(1), r.getDouble(2)) == (("gandalf", 1.0)),
+        s"Linker.link(${t.toList.map(_.toInt)})")
+      assert(local.lookup(t).map(l => (l.id, l.confidence))
+        .contains(("gandalf", 1.0)), s"lookup(${t.toList.map(_.toInt)})")
     }
   }
 
@@ -112,8 +149,8 @@ class LinkerSpec extends SparkSpec {
     import spark.implicits._
     // reference semantics: the alias index is a dict built in registry
     // order (resolver.py:60-70), so a key shared by two seeds belongs to
-    // the LATER seed. The join build side must carry one row per key or
-    // every mention of the alias duplicates downstream.
+    // the LATER seed. Seeds.aliasRows, which LocalLinker indexes, must
+    // carry one row per key, and Linker.link must emit one row per mention.
     val colliding = Seq(
       SeedEntity("strider", "Strider", Seq("the Ranger"), "character"),
       SeedEntity("aragorn", "Aragorn", Seq("Strider", "the Ranger"), "character"))
@@ -129,7 +166,7 @@ class LinkerSpec extends SparkSpec {
       .select("text", "canonical_id").collect()
     assert(linked.length == 1, "no row duplication on a colliding key")
     assert(linked(0).getString(1) == "aragorn")
-    assert(new LocalLinker(colliding).lookup("Strider").map(_._1)
+    assert(new LocalLinker(colliding).lookup("Strider").map(_.id)
       .contains("aragorn"), "LocalLinker agrees")
   }
 

@@ -68,9 +68,15 @@ class MaterializeSpec extends SparkSpec {
     assert(passagesFile.lastModified() == mtime, "early stage recomputed after kill")
   }
 
-  test("checkpoint table carries per-partition lineage and CC supersteps") {
+  /** One completed runAll warehouse shared by the specs that only read it. */
+  private lazy val completedRun: String = {
     val wh = Files.createTempDirectory("graft_wh2").toString
     Materialize.runAll(spark, sf, wh)
+    wh
+  }
+
+  test("checkpoint table carries per-partition lineage and CC supersteps") {
+    val wh = completedRun
     val ck = new Checkpoints(spark, wh).checkpointTable()
     val stages = ck.select("stage").distinct().collect().map(_.getString(0)).toSet
     assert(Set("passages", "mentions", "linked", "triples", "clusters",
@@ -92,6 +98,15 @@ class MaterializeSpec extends SparkSpec {
       .select("partition_id").distinct().count()
     assert(ckParts == partFiles.toLong,
       s"lineage partitions $ckParts != part files $partFiles")
+  }
+
+  test("runAll triples stage == Pipeline.triples as a multiset over every Triple column") {
+    val query = graft.Pipeline.triples(spark, sf)
+    val cols = query.columns.map(col).toIndexedSeq
+    val stored = spark.read.parquet(s"$completedRun/triples").select(cols: _*)
+    assert(stored.count() > 0)
+    assert(stored.exceptAll(query).isEmpty, "stored triples missing from the query path")
+    assert(query.exceptAll(stored).isEmpty, "query-path triples missing from the stored stage")
   }
 
   test("mid-CC kill: completed supersteps are reused, clusters byte-identical") {
