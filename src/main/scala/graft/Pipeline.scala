@@ -97,11 +97,11 @@ object Pipeline {
     * (session, dir). */
   def mentions(spark: SparkSession, sfDir: String): DataFrame =
     cached(spark, sfDir, "mentions") {
-      // the cleaned mention key is materialized WITH the stage: evaluating
-      // cleanKey's regex chain over the full mention table costs ~2 s per
-      // consumer at sf0.1 (measured round-6), and the linker, the cluster
-      // stage, the registry and the cross-book resolver each need it —
-      // storing it once turns four regex passes into column reads
+      // the cleaned mention key is materialized WITH the stage: cleanKey
+      // (LocalLinker.cleanKey, one pass over the text's chars behind a
+      // UDF) is needed by the linker, the cluster stage, the registry and
+      // the cross-book resolver — storing it once turns four per-row
+      // derivations into column reads
       Mentions.fromPassages(spark, textual(spark, sfDir)).toDF()
         .withColumn("mkey", Linker.cleanKey(col("text")))
     }

@@ -1,5 +1,8 @@
 package graft.extract
 
+import java.util.BitSet
+import scala.collection.mutable
+
 /** Aho-Corasick multi-pattern matcher: one pass over the text finds every
   * occurrence of every pattern (including overlapping occurrences), so the
   * gazetteer scan is O(|text| + hits) instead of O(|aliases| x |text|) —
@@ -11,42 +14,50 @@ package graft.extract
   * per-alias `indexOf` loop (asserted by AhoCorasickSpec against the
   * naive scan): all start positions per pattern, patterns may share
   * occurrences, duplicate patterns each report their own hits.
+  *
+  * Layout: the trie is built with per-node maps, then flattened into one
+  * open-addressing goto table (linear probing, load <= 1/2) keyed by the
+  * primitive `Long` `node << 16 | char`, with `Int` children, after
+  * "CAMEL Hash Table" (EDBT 2026). A transition is a multiply, a mask and
+  * a short probe — no boxed `Char`/`Integer` and no per-node map — and
+  * memory stays O(trie edges), where a dense node x alphabet DFA would
+  * need 2^16 slots per node. Each node's output ids (patterns ending
+  * there or along its failure chain) are an `Array[Int]`.
   */
-final class AhoCorasick(patterns: IndexedSeq[String]) extends Serializable {
+final class AhoCorasick private (
+    lens: Array[Int], // pattern length, by pattern id
+    keys: Array[Long], // goto table keys; AhoCorasick.Empty marks a free slot
+    vals: Array[Int], // goto table children, slot-aligned with `keys`
+    fail: Array[Int], // failure link, by node
+    outs: Array[Array[Int]]) // output pattern ids, by node
+    extends Serializable {
 
-  // trie: per-node char -> child, terminal pattern ids, failure links.
-  // Built eagerly in the constructor; all state is serializable.
-  private val children = scala.collection.mutable.ArrayBuffer(
-    scala.collection.mutable.HashMap.empty[Char, Int])
-  private val outs = scala.collection.mutable.ArrayBuffer(List.empty[Int])
+  private[this] val mask = keys.length - 1
 
-  patterns.zipWithIndex.foreach { case (p, pi) =>
-    var node = 0
-    p.foreach { c =>
-      node = children(node).getOrElseUpdate(c, {
-        children += scala.collection.mutable.HashMap.empty[Char, Int]
-        outs += Nil
-        children.length - 1
-      })
+  /** Child of `node` on `c`, or -1. */
+  @inline private def child(node: Int, c: Char): Int = {
+    val k = (node.toLong << 16) | c
+    var h = AhoCorasick.slot(k, mask)
+    var kk = keys(h)
+    while (kk != k) {
+      if (kk == AhoCorasick.Empty) return -1
+      h = (h + 1) & mask
+      kk = keys(h)
     }
-    outs(node) = pi :: outs(node)
+    vals(h)
   }
 
-  private val fail: Array[Int] = {
-    val fl = new Array[Int](children.length)
-    val queue = scala.collection.mutable.Queue.empty[Int]
-    children(0).valuesIterator.foreach { c => fl(c) = 0; queue += c }
-    while (queue.nonEmpty) {
-      val u = queue.dequeue()
-      children(u).foreach { case (ch, v) =>
-        var f = fl(u)
-        while (f != 0 && !children(f).contains(ch)) f = fl(f)
-        fl(v) = children(f).get(ch).filter(_ != v).getOrElse(0)
-        outs(v) = outs(v) ++ outs(fl(v))
-        queue += v
-      }
+  /** The automaton transition: follow failure links until `c` has a
+    * child; the root absorbs a char it has no child for.
+    */
+  @inline private def step(from: Int, c: Char): Int = {
+    var node = from
+    var next = child(node, c)
+    while (next < 0 && node != 0) {
+      node = fail(node)
+      next = child(node, c)
     }
-    fl
+    if (next < 0) 0 else next
   }
 
   /** All matches in `text`: (patternIndex, startOffset), in pattern order
@@ -54,21 +65,17 @@ final class AhoCorasick(patterns: IndexedSeq[String]) extends Serializable {
     * `indexOf` loop, so downstream overlap-dedup tie-breaks are unchanged.
     */
   def find(text: String): Seq[(Int, Int)] = {
-    val hits = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    val hits = mutable.ArrayBuffer.empty[(Int, Int)]
     var node = 0
     var i = 0
     while (i < text.length) {
-      val c = text.charAt(i)
-      while (node != 0 && !children(node).contains(c)) node = fail(node)
-      node = children(node).getOrElse(c, 0)
-      // manual List walk: a `foreach` closure here captures the loop var
-      // and is allocated once per CHARACTER of every passage (measured
-      // ~2% of the scaling leg's sampled allocation; round-5 JFR)
-      var o = outs(node)
-      while (o.nonEmpty) {
-        val pi = o.head
-        hits += ((pi, i - patterns(pi).length + 1))
-        o = o.tail
+      node = step(node, text.charAt(i))
+      val o = outs(node)
+      var j = 0
+      while (j < o.length) {
+        val pi = o(j)
+        hits += ((pi, i - lens(pi) + 1))
+        j += 1
       }
       i += 1
     }
@@ -82,18 +89,17 @@ final class AhoCorasick(patterns: IndexedSeq[String]) extends Serializable {
     * buffer, no positions, no sort). Equals find(text).map(_._1) as a
     * set (asserted by AhoCorasickSpec).
     */
-  def present(text: String): java.util.BitSet = {
-    val bs = new java.util.BitSet(patterns.length)
+  def present(text: String): BitSet = {
+    val bs = new BitSet(lens.length)
     var node = 0
     var i = 0
     while (i < text.length) {
-      val c = text.charAt(i)
-      while (node != 0 && !children(node).contains(c)) node = fail(node)
-      node = children(node).getOrElse(c, 0)
-      var o = outs(node)
-      while (o.nonEmpty) {
-        bs.set(o.head)
-        o = o.tail
+      node = step(node, text.charAt(i))
+      val o = outs(node)
+      var j = 0
+      while (j < o.length) {
+        bs.set(o(j))
+        j += 1
       }
       i += 1
     }
@@ -102,6 +108,69 @@ final class AhoCorasick(patterns: IndexedSeq[String]) extends Serializable {
 }
 
 object AhoCorasick {
+
+  /** Free goto-table slot: real keys are non-negative. */
+  private val Empty = -1L
+
+  private val NoOutput = Array.empty[Int]
+
+  @inline private def slot(key: Long, mask: Int): Int = {
+    val h = key * 0x9E3779B97F4A7C15L
+    (h ^ (h >>> 32)).toInt & mask
+  }
+
+  /** Builds the trie and its failure links, then flattens both into the
+    * goto table and output arrays; the per-node maps are dropped.
+    */
+  def apply(patterns: IndexedSeq[String]): AhoCorasick = {
+    val children = mutable.ArrayBuffer(mutable.HashMap.empty[Char, Int])
+    val outL = mutable.ArrayBuffer(List.empty[Int])
+    patterns.zipWithIndex.foreach { case (p, pi) =>
+      var node = 0
+      p.foreach { c =>
+        node = children(node).getOrElseUpdate(c, {
+          children += mutable.HashMap.empty[Char, Int]
+          outL += Nil
+          children.length - 1
+        })
+      }
+      outL(node) = pi :: outL(node)
+    }
+
+    val fail = new Array[Int](children.length)
+    val queue = mutable.Queue.empty[Int]
+    children(0).valuesIterator.foreach { c => fail(c) = 0; queue += c }
+    while (queue.nonEmpty) {
+      val u = queue.dequeue()
+      children(u).foreach { case (ch, v) =>
+        var f = fail(u)
+        while (f != 0 && !children(f).contains(ch)) f = fail(f)
+        fail(v) = children(f).get(ch).filter(_ != v).getOrElse(0)
+        outL(v) = outL(v) ++ outL(fail(v))
+        queue += v
+      }
+    }
+
+    val edges = children.iterator.map(_.size).sum
+    var cap = 2
+    while (cap < 2 * edges) cap <<= 1
+    val keys = Array.fill(cap)(Empty)
+    val vals = new Array[Int](cap)
+    children.indices.foreach { u =>
+      children(u).foreach { case (c, v) =>
+        val k = (u.toLong << 16) | c
+        var h = slot(k, cap - 1)
+        while (keys(h) != Empty) h = (h + 1) & (cap - 1)
+        keys(h) = k
+        vals(h) = v
+      }
+    }
+    val outs = outL.iterator
+      .map(l => if (l.isEmpty) NoOutput else l.toArray).toArray
+    new AhoCorasick(patterns.iterator.map(_.length).toArray,
+      keys, vals, fail, outs)
+  }
+
   /** (patternIndex, start) lexicographic — identical to the former
     * sortInPlaceBy(h => (h._1, h._2)) without boxing a tuple per compare.
     */
@@ -114,14 +183,126 @@ object AhoCorasick {
     }
 }
 
+/** Literal pre-filter for a list of regex sources compiled with
+  * CASE_INSENSITIVE and without UNICODE_CASE: one [[AhoCorasick.present]]
+  * walk over the lowercased text says which sources can possibly match, so
+  * a regex whose gate stays shut is never run. Source i's gate is the set
+  * of its [[LiteralGate.gateLiterals]]; a source without literals always
+  * runs.
+  *
+  * Sound because that regex mode folds ASCII case only: every match
+  * leaves its ASCII gate literal in a per-char `Character.toLowerCase`
+  * (or `toLowerCase(Locale.ROOT)`) copy of the text. Non-ASCII chars that
+  * lowercase to ASCII (U+212A KELVIN SIGN -> 'k', U+0130 -> 'i') can only
+  * open a gate the regex then fails, never shut one it would pass.
+  */
+private[graft] final class LiteralGate(sources: Seq[String]) {
+
+  private val (ac, ids): (AhoCorasick, Array[Array[Int]]) = {
+    val perSource = sources.map(LiteralGate.gateLiterals)
+    val distinct = perSource.flatten.flatten.distinct.toIndexedSeq
+    val litIdx = distinct.zipWithIndex.toMap
+    (AhoCorasick(distinct), perSource.map {
+      case None => Array.empty[Int]
+      case Some(ls) => ls.map(litIdx).toArray
+    }.toArray)
+  }
+
+  /** Which gate literals occur in `lower`, the lowercased text. */
+  def present(lower: String): BitSet = ac.present(lower)
+
+  /** Can source `i` match, given [[present]]'s bits for the text? */
+  def open(bits: BitSet, i: Int): Boolean = {
+    val g = ids(i)
+    if (g.isEmpty) return true
+    var j = 0
+    while (j < g.length) {
+      if (bits.get(g(j))) return true
+      j += 1
+    }
+    false
+  }
+}
+
+object LiteralGate {
+
+  /** Gate literals of a regex source: the alternatives of its first
+    * mandatory group, which any match must contain. The source must start
+    * `\b(alt|alt|...)`; an optional group right after the `\b` (`?` or
+    * `*`, e.g. `\b(the\s+)?(...)`) need not occur in a match, so the group
+    * right after it is used instead. Each alternative is truncated at its
+    * first regex metacharacter (additionally dropping a character made
+    * optional by `?`: "elves?" -> "elve", "Ring-?bearer" -> "ring") and
+    * lowercased. Returns None — the pattern always runs — when the shape
+    * assumption fails (a nested or escaped-paren group, a quantified
+    * gate group, a top-level `|`, an empty literal), so an unexpected
+    * pattern degrades to ungated rather than wrongly gated.
+    */
+  private[graft] def gateLiterals(src: String): Option[Seq[String]] = {
+    if (!src.startsWith("""\b(""") || hasTopLevelAlternation(src)) return None
+    // the first group ends at src(end); None unless it is a flat group
+    var open = 2
+    var end = groupEnd(src, open)
+    if (end < 0) return None
+    if (end + 2 < src.length && "?*".indexOf(src.charAt(end + 1).toInt) >= 0 &&
+      src.charAt(end + 2) == '(') {
+      open = end + 2
+      end = groupEnd(src, open)
+      if (end < 0) return None
+    }
+    if (end + 1 < src.length && "?*{".indexOf(src.charAt(end + 1).toInt) >= 0)
+      return None
+    val metas = "\\^$.|?*+()[]{}"
+    val lits = src.substring(open + 1, end).split('|').toSeq.map { alt =>
+      val mIdx = alt.indexWhere(c => metas.indexOf(c.toInt) >= 0)
+      if (mIdx < 0) alt
+      else if (mIdx > 0 && alt.charAt(mIdx) == '?') alt.substring(0, mIdx - 1)
+      else alt.substring(0, mIdx)
+    }.map(_.toLowerCase(java.util.Locale.ROOT))
+    if (lits.exists(_.isEmpty)) None else Some(lits)
+  }
+
+  /** Index of the `)` closing the group opened at `src(open)`, or -1 when
+    * that group nests another group or ends in an escaped `\)`.
+    */
+  private def groupEnd(src: String, open: Int): Int = {
+    val end = src.indexOf(')', open + 1)
+    if (end < 0 || src.charAt(end - 1) == '\\' ||
+      src.substring(open + 1, end).indexOf('(') >= 0) -1
+    else end
+  }
+
+  /** True iff `src` has a `|` outside every group and character class
+    * (then no single group is mandatory).
+    */
+  private def hasTopLevelAlternation(src: String): Boolean = {
+    var depth = 0
+    var inClass = false
+    var i = 0
+    while (i < src.length) {
+      src.charAt(i) match {
+        case '\\' => i += 1
+        case '[' => inClass = true
+        case ']' => inClass = false
+        case '(' if !inClass => depth += 1
+        case ')' if !inClass => depth -= 1
+        case '|' if !inClass && depth == 0 => return true
+        case _ =>
+      }
+      i += 1
+    }
+    false
+  }
+}
+
 /** A broadcast-friendly gazetteer: alias entries + the compiled automaton.
   * The automaton is rebuilt lazily per executor after deserialization
-  * (marked @transient — the trie is cheap to rebuild relative to shipping
-  * its boxed maps).
+  * (marked @transient — rebuilding the trie is cheap relative to shipping
+  * it).
   */
 final class Gazetteer(val entries: IndexedSeq[(String, String)])
     extends Serializable {
-  @transient private lazy val ac = new AhoCorasick(entries.map(_._1))
+  @transient private lazy val ac = AhoCorasick(entries.map(_._1))
 
   /** Gazetteer hits over `lower` (the lowercased text): one
     * (aliasIndex, start) per occurrence, word-boundary checked by the

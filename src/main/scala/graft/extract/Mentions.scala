@@ -21,8 +21,9 @@ final case class Mention(
   * (extract/ner.py:78-290): capitalized-span heuristic replaces the spaCy
   * model, the title/epithet regexes are ported verbatim, and a broadcast
   * gazetteer scan replaces the LLM extractor (same information source as
-  * the seeds). Patterns are compiled once per partition; rows are processed
-  * in bulk with no shuffle.
+  * the seeds). The patterns are JVM-level singletons, matched through
+  * thread-local matchers ([[Hot.of]]); rows are processed in bulk with no
+  * shuffle.
   */
 object Mentions {
 
@@ -35,13 +36,22 @@ object Mentions {
     Pattern.compile("""\b([A-Z][a-z]+(?:\s+[A-Z][a-z]+)*)\b""")
 
   /** TITLE_PATTERNS + EPITHET_PATTERNS, reference ner.py:34-44, conf 0.9. */
-  private val NamedPatterns: Seq[Pattern] = Seq(
+  private[extract] val NamedSources: IndexedSeq[String] = IndexedSeq(
     """\b(King|Queen|Lord|Lady|Prince|Princess|Chief|Captain|Steward)\s+(?:of\s+)?([A-Z][a-z]+(?:\s+[A-Z][a-z]+)*)""",
     """\b(the\s+)?(Grey|White|Dark|Black|High|Great)\s+(Wizard|King|Lord|Lady|Enemy|Rider)""",
     """\b(the\s+)?(Ring-?bearer|Halfling|Perian|Dwarf-friend|Elf-friend)""",
     """\b(the\s+)?(Necromancer|Enemy|Dark Lord|Shadow)""",
-    """\b(Gandalf|Saruman|Radagast)\s+(the\s+)?(Grey|White|Brown)"""
-  ).map(p => Pattern.compile(p, Pattern.CASE_INSENSITIVE))
+    """\b(Gandalf|Saruman|Radagast)\s+(the\s+)?(Grey|White|Brown)""")
+
+  private[extract] val NamedPatterns: IndexedSeq[Pattern] =
+    NamedSources.map(p => Pattern.compile(p, Pattern.CASE_INSENSITIVE))
+
+  /** Literal gate of [[NamedPatterns]]: pattern i runs only on a passage
+    * holding one of its title/epithet words. Four of the five rarely match
+    * a passage, and each ungated CASE_INSENSITIVE `find()` scanned the
+    * whole passage. MentionsSpec pins gated == ungated.
+    */
+  private val NamedGate = new LiteralGate(NamedSources)
 
   /** Label for a gazetteer hit, by seed entity type. */
   private def gazLabel(entityType: String): String = entityType match {
@@ -99,23 +109,11 @@ object Mentions {
         out += Raw(t, start, start + t.length, "UNKNOWN", "heuristic", 0.7)
     }
 
-    // 2. title/epithet patterns (PERSON, conf 0.9) — ner.py:160-177
-    NamedPatterns.foreach { p =>
-      val pm = Hot.of(p, text)
-      while (pm.find())
-        out += Raw(pm.group(0), pm.start, pm.end, "PERSON", "pattern", 0.9)
-    }
-
-    // 3. gazetteer scan (typed, conf 0.85) — deterministic substitute for
-    //    the LLM extractor (ner.py:179-260); locate-by-find, like the
-    //    reference does for LLM spans (ner.py:238-241), but all
-    //    occurrences. One Aho-Corasick pass: linear in text length, NOT in
-    //    the alias count — the per-alias indexOf loop was the one stage
-    //    that degraded linearly with registry size (VERDICT r02 #3).
-    // length-PRESERVING per-char lowercase: String.toLowerCase(java.util.Locale.ROOT) can change
-    // the string length (e.g. U+0130 'İ' expands to two chars), which
-    // would shift every subsequent hit offset relative to `text` and can
-    // push endIdx past text.length (round-5 review). Character-level
+    // length-PRESERVING per-char lowercase, shared by the pattern gate and
+    // the gazetteer scan: String.toLowerCase(java.util.Locale.ROOT) can
+    // change the string length (e.g. U+0130 'İ' expands to two chars),
+    // which would shift every subsequent hit offset relative to `text` and
+    // can push endIdx past text.length (round-5 review). Character-level
     // lowercasing never changes length.
     val lower = {
       val cs = new Array[Char](text.length)
@@ -125,6 +123,25 @@ object Mentions {
       }
       new String(cs)
     }
+
+    // 2. title/epithet patterns (PERSON, conf 0.9) — ner.py:160-177
+    val gate = NamedGate.present(lower)
+    var np = 0
+    while (np < NamedPatterns.length) {
+      if (NamedGate.open(gate, np)) {
+        val pm = Hot.of(NamedPatterns(np), text)
+        while (pm.find())
+          out += Raw(pm.group(0), pm.start, pm.end, "PERSON", "pattern", 0.9)
+      }
+      np += 1
+    }
+
+    // 3. gazetteer scan (typed, conf 0.85) — deterministic substitute for
+    //    the LLM extractor (ner.py:179-260); locate-by-find, like the
+    //    reference does for LLM spans (ner.py:238-241), but all
+    //    occurrences. One Aho-Corasick pass: linear in text length, NOT in
+    //    the alias count — the per-alias indexOf loop was the one stage
+    //    that degraded linearly with registry size (VERDICT r02 #3).
     gazetteer.hits(lower).foreach { case (pi, idx) =>
       val (name, etype) = gazetteer.entries(pi)
       val endIdx = idx + name.length
@@ -188,8 +205,7 @@ object Mentions {
     new Gazetteer(Seeds.aliasRows(seeds).map(r => (r._1, r._3)).toIndexedSeq)
 
   /** Spark stage: textual passages -> Dataset[Mention]. Narrow
-    * (mapPartitions), the compiled gazetteer automaton broadcast once,
-    * patterns compiled per task.
+    * (mapPartitions), the compiled gazetteer automaton broadcast once.
     */
   def fromPassages(
       spark: SparkSession,

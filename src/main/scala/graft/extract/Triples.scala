@@ -64,7 +64,7 @@ object Triples {
     */
   private val DetPrefix: Pattern =
     Pattern.compile("""\b([Tt]he|[Aa]n?)\s+((?:[a-z]+(?:'[a-z]+)?\s+){0,3})$""")
-  private val QuoteRegion: Pattern =
+  private[extract] val QuoteRegion: Pattern =
     Pattern.compile("\"[^\"]*\"|“[^”]*”")
 
   /** A linked mention span visible to the extractor. */
@@ -109,6 +109,22 @@ object Triples {
     None
   }
 
+  private val NoQuotes = (Array.empty[Int], Array.empty[Int])
+
+  /** [[QuoteRegion]] match (starts, ends). Every match opens with `"` or
+    * `“`, so a passage holding neither skips the scan (TriplesSpec pins
+    * this equal to the plain scan).
+    */
+  private[extract] def quoteRegions(text: String): (Array[Int], Array[Int]) =
+    if (text.indexOf('"') < 0 && text.indexOf('“') < 0) NoQuotes
+    else {
+      val q = Hot.of(QuoteRegion, text)
+      val s = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val e = scala.collection.mutable.ArrayBuffer.empty[Int]
+      while (q.find()) { s += q.start; e += q.end }
+      (s.toArray, e.toArray)
+    }
+
   /** Pure per-passage extractor — unit-testable without Spark. */
   private[extract] def extract(
       text: String,
@@ -116,13 +132,7 @@ object Triples {
     // quote regions (for argument/attribution scoping) — primitive arrays
     // + index-walk quoteOf: the indexWhere closure captured `p` and was
     // allocated once per lookup in the verb loop (round-5 JFR)
-    val (qStarts, qEnds) = {
-      val q = Hot.of(QuoteRegion, text)
-      val s = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val e = scala.collection.mutable.ArrayBuffer.empty[Int]
-      while (q.find()) { s += q.start; e += q.end }
-      (s.toArray, e.toArray)
-    }
+    val (qStarts, qEnds) = quoteRegions(text)
     def quoteOf(p: Int): Int = {
       var i = 0
       while (i < qStarts.length) {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 /** World-bible extraction (reference worldbible/patterns.py + extractor.py,
   * SURVEY.md §2.11): multi-label category scoring (W3) and rule-pattern
   * extraction (W2/W7). Constants ported verbatim; runs as a narrow
-  * mapPartitions stage with per-partition compiled patterns.
+  * mapPartitions stage. The patterns are compiled once per JVM.
   */
 object WorldBible {
 
@@ -66,74 +66,31 @@ object WorldBible {
     ("""(\w+(?:\s+\w+)*)\s+(always|never)\s+([\w\s]+)""", "always_never"),
     ("""it\s+(is|was)\s+(said|known|believed|written)\s+that\s+([\w\s,]+)""", "lore"))
 
-  private lazy val categoryPatterns: Seq[(String, Seq[Pattern])] =
-    CategoryKeywords.map { case (c, ps) =>
-      c -> ps.map(p => Pattern.compile(p, Pattern.CASE_INSENSITIVE))
-    }
-
-  /** Leading-literal-group alternatives of a category pattern source —
-    * the pattern's gate literals. Every category pattern starts with a
-    * `\b(alt|alt|...)` literal alternation, so any match must CONTAIN
-    * one of the alternatives' mandatory prefixes: each alternative is
-    * truncated at its first regex metacharacter (additionally dropping a
-    * character made optional by `?`, e.g. "elves?" -> "elve",
-    * "days?' journey" -> "day"). Returns None — pattern always runs —
-    * when the shape assumption fails, so an unexpected future pattern
-    * degrades to ungated rather than wrongly gated.
+  /** Per category, each compiled pattern with its index in the flattened
+    * [[CategoryKeywords]] sources (its [[catGate]] index).
     */
-  private[worldbible] def gateLiterals(src: String): Option[Seq[String]] = {
-    if (!src.startsWith("""\b(""")) return None
-    val end = src.indexOf(')', 3)
-    if (end < 0) return None
-    val metas = "\\^$.|?*+()[]{}"
-    val lits = src.substring(3, end).split('|').toSeq.map { alt =>
-      val mIdx = alt.indexWhere(c => metas.indexOf(c.toInt) >= 0)
-      if (mIdx < 0) alt
-      else if (mIdx > 0 && alt.charAt(mIdx) == '?') alt.substring(0, mIdx - 1)
-      else alt.substring(0, mIdx)
-    }.map(_.toLowerCase(java.util.Locale.ROOT))
-    if (lits.exists(_.isEmpty)) None else Some(lits)
+  private lazy val categoryPatterns: Seq[(String, Seq[(Pattern, Int)])] = {
+    val offsets = CategoryKeywords.map(_._2.size).scanLeft(0)(_ + _)
+    CategoryKeywords.zip(offsets).map { case ((c, ps), off) =>
+      c -> ps.zipWithIndex.map { case (p, i) =>
+        (Pattern.compile(p, Pattern.CASE_INSENSITIVE), off + i)
+      }
+    }
   }
 
   /** One Aho-Corasick pass over the lowercased passage decides which of
-    * the 38 category regexes can possibly match (the gate literals are
-    * lowercase ASCII and the patterns are CASE_INSENSITIVE without
-    * UNICODE_CASE, so the lowercased scan reproduces the fold exactly).
+    * the 38 category regexes can possibly match (graft.extract.LiteralGate:
+    * every category pattern starts with a `\b(alt|...)` literal group).
     * Before the gate, classify/extractAll ran every category regex over
     * every passage — the bulk of the wb_categories/wb_rules stage
     * builds. WorldBibleSpec pins gated == ungated.
-    *
-    * catGateIds: per category, per pattern, the literal ids whose
-    * presence allows the pattern (empty array = always run).
     */
-  private lazy val (catGateAc, catGateIds) = {
-    val perPattern: Seq[Option[Seq[String]]] =
-      CategoryKeywords.flatMap(_._2).map(gateLiterals)
-    val distinct = perPattern.flatten.flatten.distinct.toIndexedSeq
-    val litIdx = distinct.zipWithIndex.toMap
-    val flat: Seq[Array[Int]] = perPattern.map {
-      case None => Array.empty[Int]
-      case Some(ls) => ls.map(litIdx).toArray
-    }
-    val sizes = CategoryKeywords.map(_._2.size)
-    val grouped = sizes.foldLeft((Seq.empty[Seq[Array[Int]]], flat)) {
-      case ((acc, rest), n) => (acc :+ rest.take(n), rest.drop(n))
-    }._1
-    (new graft.extract.AhoCorasick(distinct), grouped)
-  }
+  private lazy val catGate =
+    new graft.extract.LiteralGate(CategoryKeywords.flatMap(_._2))
 
-  private def catGateBits(lower: String): java.util.BitSet =
-    catGateAc.present(lower)
+  private def catGateBits(text: String): java.util.BitSet =
+    catGate.present(text.toLowerCase(java.util.Locale.ROOT))
 
-  @inline private def gateOpen(bits: java.util.BitSet, g: Array[Int]): Boolean = {
-    if (g.isEmpty) return true
-    var i = 0
-    while (i < g.length) {
-      if (bits.get(g(i))) return true
-      i += 1
-    }
-    false
-  }
   private lazy val rulePatterns: Seq[(Pattern, String)] =
     RulePatterns.map { case (p, n) =>
       (Pattern.compile(p, Pattern.CASE_INSENSITIVE), n)
@@ -174,10 +131,10 @@ object WorldBible {
     * 'themes' fallback (patterns.py:162-177).
     */
   private def inferCategory(context: String): String = {
-    val bits = catGateBits(context.toLowerCase(java.util.Locale.ROOT))
-    val scores = categoryPatterns.zip(catGateIds).map { case ((c, ps), gs) =>
-      c -> ps.zip(gs).map { case (p, g) =>
-        if (gateOpen(bits, g)) countMatches(p, context) else 0
+    val bits = catGateBits(context)
+    val scores = categoryPatterns.map { case (c, ps) =>
+      c -> ps.map { case (p, i) =>
+        if (catGate.open(bits, i)) countMatches(p, context) else 0
       }.sum
     }.filter(_._2 > 0)
     if (scores.isEmpty) "themes" else scores.maxBy(_._2)._1
@@ -187,12 +144,12 @@ object WorldBible {
     * 1.0; +0.3 boost (or 0.5 floor) when a rule pattern is present.
     */
   def classify(text: String): Seq[(String, Double)] = {
-    val bits = catGateBits(text.toLowerCase(java.util.Locale.ROOT))
+    val bits = catGateBits(text)
     val scores = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    categoryPatterns.zip(catGateIds).foreach { case ((c, ps), gs) =>
+    categoryPatterns.foreach { case (c, ps) =>
       var s = 0.0
-      ps.zip(gs).foreach { case (p, g) =>
-        if (gateOpen(bits, g)) s += countMatches(p, text) * 0.2
+      ps.foreach { case (p, i) =>
+        if (catGate.open(bits, i)) s += countMatches(p, text) * 0.2
       }
       if (s > 0) scores(c) = math.min(s, 1.0)
     }
@@ -236,10 +193,10 @@ object WorldBible {
     * conf 0.7, pattern_name "keyword".
     */
   def categoryMatches(text: String): Seq[Match] = {
-    val bits = catGateBits(text.toLowerCase(java.util.Locale.ROOT))
-    categoryPatterns.zip(catGateIds).flatMap { case ((c, ps), gs) =>
-      ps.zip(gs).flatMap { case (p, g) =>
-        if (!gateOpen(bits, g)) Nil
+    val bits = catGateBits(text)
+    categoryPatterns.flatMap { case (c, ps) =>
+      ps.flatMap { case (p, i) =>
+        if (!catGate.open(bits, i)) Nil
         else {
           val m = graft.extract.Hot.of(p, text)
           val b = scala.collection.mutable.ArrayBuffer.empty[Match]

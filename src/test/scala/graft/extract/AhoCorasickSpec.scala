@@ -17,8 +17,25 @@ class AhoCorasickSpec extends AnyFunSuite {
       b.toSeq
     }
 
-  private def check(patterns: IndexedSeq[String], text: String): Unit =
-    assert(new AhoCorasick(patterns).find(text) === naive(patterns, text))
+  /** find equals the naive scan, and present equals its pattern-id set. */
+  private def check(patterns: IndexedSeq[String], text: String): Unit = {
+    val ac = AhoCorasick(patterns)
+    val expected = naive(patterns, text)
+    assert(ac.find(text) === expected)
+    assert(ac.present(text).stream().toArray.toSet === expected.map(_._1).toSet)
+  }
+
+  private def randomParity(seed: Int, alphabet: String, rounds: Int,
+      maxPatterns: Int, maxLen: Int, textLen: Int): Unit = {
+    val rnd = new scala.util.Random(seed)
+    def word(len: Int): String =
+      (1 to len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+    (1 to rounds).foreach { _ =>
+      val patterns = Vector.fill(rnd.nextInt(maxPatterns) + 1)(
+        word(rnd.nextInt(maxLen) + 1))
+      check(patterns, word(textLen))
+    }
+  }
 
   test("basic multi-pattern matching equals the naive scan") {
     check(Vector("gandalf", "bilbo", "gan", "dal"),
@@ -42,16 +59,24 @@ class AhoCorasickSpec extends AnyFunSuite {
   }
 
   test("randomized parity against the naive scan") {
-    val rnd = new scala.util.Random(42)
-    val alphabet = "abcd "
-    (1 to 50).foreach { _ =>
-      val patterns = Vector.fill(rnd.nextInt(8) + 1)(
-        (1 to (rnd.nextInt(4) + 1)).map(_ =>
-          alphabet(rnd.nextInt(alphabet.length))).mkString)
-      val text = (1 to 200).map(_ =>
-        alphabet(rnd.nextInt(alphabet.length))).mkString
-      check(patterns, text)
-    }
+    randomParity(42, "abcd ", rounds = 50, maxPatterns = 8, maxLen = 4,
+      textLen = 200)
+  }
+
+  test("randomized parity over a non-ASCII alphabet") {
+    // chars beyond Latin-1 and the U+212A KELVIN SIGN exercise the full
+    // 16-bit char range of the goto-table key
+    randomParity(43, "aké“\u212AK ", rounds = 50, maxPatterns = 8,
+      maxLen = 4, textLen = 200)
+  }
+
+  test("parity with 5,000 patterns (many goto-table collisions)") {
+    val rnd = new scala.util.Random(44)
+    val alphabet = "abcdefghé“\u212A "
+    def word(len: Int): String =
+      (1 to len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+    val patterns = Vector.fill(5000)(word(rnd.nextInt(6) + 1))
+    (1 to 5).foreach(_ => check(patterns, word(2000)))
   }
 
   test("per-text cost stays ~flat when the alias count grows 10x") {
@@ -71,9 +96,8 @@ class AhoCorasickSpec extends AnyFunSuite {
       (1 to reps).foreach(_ => ac.find(text))
       (System.nanoTime() - t0).toDouble / reps
     }
-    val small = new AhoCorasick(aliases(72))
-    val big = new AhoCorasick(aliases(720))
-    // min-of-3 per side to reject co-tenant noise
+    val small = AhoCorasick(aliases(72))
+    val big = AhoCorasick(aliases(720))
     val tSmall = (1 to 3).map(_ => perTextNanos(small)).min
     val tBig = (1 to 3).map(_ => perTextNanos(big)).min
     assert(tBig < tSmall * 6,
@@ -88,5 +112,18 @@ class AhoCorasickSpec extends AnyFunSuite {
     val viaAc = Mentions.detect(text, new Gazetteer(gaz.toIndexedSeq))
     assert(viaSeq === viaAc)
     assert(viaAc.count(_.source == "gazetteer") === 4)
+  }
+
+  test("gateLiterals skips an optional leading group and refuses unsound shapes") {
+    import LiteralGate.gateLiterals
+    assert(gateLiterals("""\b(the\s+)?(Ring-?bearer|Halfling)""").get ==
+      Seq("ring", "halfling"))
+    assert(gateLiterals("""\b(King|Lord)\s+(?:of\s+)?([A-Z][a-z]+)""").get ==
+      Seq("king", "lord"))
+    assert(gateLiterals("""\b(a|b)|c""").isEmpty) // top-level alternation
+    assert(gateLiterals("""\b(ab(c|d)|e)""").isEmpty) // nested group
+    assert(gateLiterals("""\b(the\s+)?(x)?y""").isEmpty) // optional gate group
+    assert(gateLiterals("""\b(foo){0,1}bar""").isEmpty) // quantified group
+    assert(gateLiterals("""\b(a\)|b)""").isEmpty) // escaped paren
   }
 }

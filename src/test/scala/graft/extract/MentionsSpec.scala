@@ -85,4 +85,82 @@ class MentionsSpec extends AnyFunSuite {
     assert(text.substring(g.start, g.end) == "Gandalf")
     assert(g.end == text.length)
   }
+
+  /** The ungated reference: every title/epithet regex over the text. */
+  private def ungatedPatternScan(text: String): Seq[Mentions.Raw] =
+    Mentions.NamedPatterns.flatMap { p =>
+      val m = p.matcher(text)
+      val b = scala.collection.mutable.ArrayBuffer.empty[Mentions.Raw]
+      while (m.find())
+        b += Mentions.Raw(m.group(0), m.start, m.end, "PERSON", "pattern", 0.9)
+      b.toSeq
+    }
+
+  /** Per pattern, one phrase per alternative of its mandatory group. */
+  private val phrases: Seq[Seq[String]] = Seq(
+    Seq("King Elessar", "Queen Of Gondor", "Lord Elrond", "Lady Galadriel",
+      "Prince Imrahil", "Princess Arwen", "Chief Lotho", "Captain Faramir",
+      "Steward of Gondor"),
+    Seq("the Grey Wizard", "White Rider", "the Dark Lord", "Black Rider",
+      "High King", "the Great Enemy"),
+    Seq("the Ring-bearer", "Ringbearer", "Halfling", "the Perian",
+      "Dwarf-friend", "Elf-friend"),
+    Seq("the Necromancer", "Enemy", "the Dark Lord", "Shadow"),
+    Seq("Gandalf the Grey", "Saruman White", "Radagast the Brown"))
+
+  private def mixCase(s: String, rnd: scala.util.Random): String =
+    s.map(c => if (rnd.nextBoolean()) c.toUpper else c.toLower)
+
+  test("title/epithet gate: gated detectRaw equals the ungated five-regex scan") {
+    val rnd = new scala.util.Random(5)
+    val all = phrases.flatten
+    val texts = all ++ all.map(_.toUpperCase) ++ all.map(_.toLowerCase) ++
+      all.map(mixCase(_, rnd)) ++
+      all.map(p => if (p.startsWith("the ")) p.drop(4) else s"the $p") ++
+      Seq(
+        "Then the Ring-bearer and the Ringbearer met the ring bearer.",
+        "Ring bearer, Ring--bearer, ring-Bearer, bearer of the Ring.",
+        "The Dark Lord, the dark  lord, the Dark\tLord, the DarkLord.",
+        "Darkness fell on the lordly hall; the dark was deep.",
+        "Kingly Lords, a queenly lady, the stewardship of captains.",
+        "Gandalf, the Grey Pilgrim; Saruman of Many Colours.",
+        // case-fold traps: neither folds to ASCII under CASE_INSENSITIVE
+        // without UNICODE_CASE, but both lowercase to ASCII letters
+        "\u212Aing Elessar and the Dar\u212A Lord",
+        "\u0130nterloper Lord Elrond and K\u0130ng Bard",
+        "\u017Faruman the White and Halfling \u017Fhadow",
+        "No titles here, only hobbits.",
+        "")
+    texts.foreach { t =>
+      assert(Mentions.detectRaw(t, emptyGaz).filter(_.source == "pattern") ===
+        ungatedPatternScan(t), t)
+    }
+  }
+
+  test("every alternative of each title/epithet pattern contains a gate literal") {
+    assert(phrases.size == Mentions.NamedSources.size)
+    Mentions.NamedSources.zip(phrases).foreach { case (src, ps) =>
+      val lits = LiteralGate.gateLiterals(src)
+      assert(lits.isDefined, s"no gate for $src")
+      assert(!lits.get.contains("the"), s"gate on the optional group: $src")
+      // the mandatory group: the first one not followed by `?`
+      val groups = "\\(([^()]*)\\)(\\??)".r.findAllMatchIn(src)
+        .filter(_.group(2).isEmpty).map(_.group(1)).toSeq
+      val alts = groups.head.split('|').toSeq
+      val p = java.util.regex.Pattern.compile(src,
+        java.util.regex.Pattern.CASE_INSENSITIVE)
+      alts.foreach { alt =>
+        val altP = java.util.regex.Pattern.compile(alt,
+          java.util.regex.Pattern.CASE_INSENSITIVE)
+        val covering = ps.filter(ph => altP.matcher(ph).find())
+        assert(covering.nonEmpty, s"no phrase for alternative $alt of $src")
+        covering.foreach { ph =>
+          val m = p.matcher(ph)
+          assert(m.find(), s"$ph does not match $src")
+          assert(lits.get.exists(m.group(0).toLowerCase.contains(_)),
+            s"match '${m.group(0)}' of $src holds none of ${lits.get}")
+        }
+      }
+    }
+  }
 }

@@ -127,4 +127,27 @@ class TriplesSpec extends AnyFunSuite {
     assert(fought.get._1 == "The dragon")
     assert(fought.get._5.flatMap(_.id).contains("smaug"))
   }
+
+  test("gated quote regions equal the plain QuoteRegion scan") {
+    def plain(text: String): Seq[(Int, Int)] = {
+      val m = Triples.QuoteRegion.matcher(text)
+      val b = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      while (m.find()) b += ((m.start, m.end))
+      b.toSeq
+    }
+    Seq(
+      "\"Fly, you fools!\" cried Gandalf.",
+      "“Fly,” he said, “you fools.”",
+      "Straight \"then “curly” then\" mixed.",
+      "An unbalanced \"quote never closes.",
+      "An unbalanced “curly quote never closes.",
+      "A stray closing ” and a stray ' apostrophe.",
+      "No quotes at all in this passage.",
+      "\"",
+      "“",
+      "").foreach { t =>
+      val (s, e) = Triples.quoteRegions(t)
+      assert(s.toSeq.zip(e.toSeq) === plain(t), t)
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.worldbible
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.extract.LiteralGate
 
 class WorldBibleSpec extends AnyFunSuite {
 
@@ -158,16 +159,16 @@ class WorldBibleSpec extends AnyFunSuite {
     // the derived literal (case-folded)
     WorldBible.CategoryKeywords.foreach { case (_, ps) =>
       ps.foreach { src =>
-        val lits = WorldBible.gateLiterals(src)
+        val lits = LiteralGate.gateLiterals(src)
         assert(lits.nonEmpty && lits.get.nonEmpty, s"no gate for $src")
         lits.get.foreach(l => assert(l.nonEmpty && l == l.toLowerCase))
       }
     }
     // spot-check the metachar-truncation rules
-    assert(WorldBible.gateLiterals("""\b(elves?|men)""").get ==
+    assert(LiteralGate.gateLiterals("""\b(elves?|men)""").get ==
       Seq("elve", "men"))
-    assert(WorldBible.gateLiterals("""\b(days?' journey|travel)""").get ==
+    assert(LiteralGate.gateLiterals("""\b(days?' journey|travel)""").get ==
       Seq("day", "travel"))
-    assert(WorldBible.gateLiterals("""(no_leading_group)""").isEmpty)
+    assert(LiteralGate.gateLiterals("""(no_leading_group)""").isEmpty)
   }
 }
