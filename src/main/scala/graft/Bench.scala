@@ -430,7 +430,10 @@ object Bench {
       def linkFamily(txt: org.apache.spark.sql.DataFrame): Long = {
         val m = graft.extract.Mentions.fromPassages(spark, txt).toDF()
         val l = graft.extract.Linker.link(spark, m)
-        val cl = graft.extract.Canonicalize.clusters(spark, txt, m)._1
+        val cl = graft.extract.Canonicalize.clusters(spark, m,
+          graft.extract.Canonicalize.aliasPairs(spark, txt),
+          graft.extract.Canonicalize.coocMergeEdges(m),
+          graft.graph.StageStore.Local)._1
         l.count() + cl.count()
       }
       val txt = Pipeline.textual(spark, sfDir)

@@ -74,8 +74,8 @@ object SparkEntry {
           f4(col("similarity")).as("similarity"))
     }),
     "q41_voice_stats" -> ((s, dir) =>
-      graft.voice.Dialogue.voiceStats(s, Pipeline.dialogue(s, dir),
-        preProfiles = Some(Pipeline.voiceProfiles(s, dir)))),
+      graft.voice.Dialogue.voiceStats(Pipeline.dialogue(s, dir),
+        Pipeline.voiceProfiles(s, dir))),
     "q42_top_words" -> ((s, dir) =>
       graft.voice.Profiles.topWordsFromCounts(
         Pipeline.dialogueWordCounts(s, dir))),
@@ -115,8 +115,7 @@ object SparkEntry {
     "q18_dedup_exact" -> ((s, dir) =>
       graft.text.Dedup.exactGroups(Pipeline.textual(s, dir), col("text"))),
     "q19_dedup_ngram" -> ((s, dir) =>
-      graft.text.Dedup.consecutiveJaccard(docsTable(s, dir), "doc_id", "text",
-        pinnedShingles = Some(Pipeline.shingles(s, dir)))),
+      graft.text.Dedup.consecutiveJaccard(Pipeline.shingles(s, dir))),
     "q20_langid" -> ((s, dir) =>
       graft.text.TextAnalysis.langId(docsTable(s, dir), col("text"))
         .select("doc_id", "predicted_lang", "lang_score")),
@@ -135,8 +134,7 @@ object SparkEntry {
     "q25_embedding_neardup" -> ((s, dir) =>
       graft.ml.Similarity.nearDupPairs(embTable(s, dir), 0.4)),
     "q26_minhash_dups" -> ((s, dir) =>
-      graft.text.Dedup.minhashNearDups(s, docsTable(s, dir), "doc_id", "text",
-        pinnedShingles = Some(Pipeline.shingles(s, dir)))),
+      graft.text.Dedup.minhashNearDups(s, Pipeline.shingles(s, dir))),
     "q27_simhash_dups" -> ((s, dir) =>
       graft.text.Dedup.simhashNearDups(s, docsTable(s, dir), "doc_id", "text",
         maxHamming = 6)),
@@ -170,11 +168,9 @@ object SparkEntry {
           graft.style.Metrics.floor4(col("delta")).as("delta"))
     }),
     "q37_crossbook" -> ((s, dir) =>
-      graft.corpus.CrossBook.resolveAll(s,
-        Pipeline.textual(s, dir), Pipeline.linked(s, dir),
+      graft.corpus.CrossBook.resolveAll(s, Pipeline.linked(s, dir),
         pmod(substring(col("doc_id"), 5, 18).cast("long"), lit(4L)),
-        pinnedAliasPairs = Some(Pipeline.aliasPairs(s, dir)),
-        pinnedCoocEdges = Some(Pipeline.coocEdges(s, dir)))._1),
+        Pipeline.aliasPairs(s, dir), Pipeline.coocEdges(s, dir))._1),
     "q38_top_entities" -> ((s, dir) => {
       // top-k idiom: TakeOrderedAndProject narrows to 10 rows BEFORE the
       // (unavoidable) global rank window runs — no full-table single
@@ -214,7 +210,7 @@ object SparkEntry {
         Pipeline.textual(s, dir)
           .withColumn("corpus",
             pmod(substring(col("doc_id"), 5, 18).cast("long"), lit(2L))),
-        "corpus", preClassified = Some(Pipeline.classified(s, dir)))),
+        "corpus", Pipeline.classified(s, dir))),
     "q50_word_lengths" -> ((s, dir) =>
       graft.style.Fingerprint.wordLengthDistribution(
         Pipeline.textual(s, dir)
@@ -222,15 +218,15 @@ object SparkEntry {
             pmod(substring(col("doc_id"), 5, 18).cast("long"), lit(2L))),
         "corpus")),
     "q43_cultures" -> ((s, dir) =>
-      graft.worldbible.WorldBible.cultures(s, Pipeline.textual(s, dir),
-        Some(Pipeline.wbCategories(s, dir)))
+      graft.worldbible.WorldBible.cultures(Pipeline.textual(s, dir),
+        Pipeline.wbCategories(s, dir))
         .select("people", "name", "passages")),
     "q44_magic" -> ((s, dir) =>
-      graft.worldbible.WorldBible.magicPassages(s, Pipeline.textual(s, dir),
-        Some(Pipeline.wbCategories(s, dir)))),
+      graft.worldbible.WorldBible.magicPassages(Pipeline.textual(s, dir),
+        Pipeline.wbCategories(s, dir))),
     "q45_geography" -> ((s, dir) =>
       graft.worldbible.WorldBible.geography(s, Pipeline.textual(s, dir),
-        Some(Pipeline.wbCategories(s, dir)))),
+        Pipeline.wbCategories(s, dir))),
     "q40_timeline" -> ((s, dir) =>
       Pipeline.timeline(s, dir)
         .select("name", "birth_era", "death_era")),
@@ -261,10 +257,15 @@ object SparkEntry {
             struct(concat(col("nm"), lit(" Field")).as("text"),
               lit("place").as("entity_type")))).as("mn"))
         .select(col("doc_id"), col("pos"), col("book"),
-          col("mn.text").as("text"), col("mn.entity_type").as("entity_type"))
-      graft.corpus.CrossBook
-        .resolveAll(s, Pipeline.textual(s, dir), ments, col("book"),
-          pinnedAliasPairs = Some(Pipeline.aliasPairs(s, dir)))._1
+          col("mn.entity_type").as("entity_type"),
+          graft.extract.Linker.cleanKey(col("mn.text")).as("mkey"))
+        // pinned once, keyed by the cleaned text: resolveAll and the
+        // co-occurrence pass both read it, and resolveAll re-reads a
+        // materialized input instead of pinning it again
+        .localCheckpoint(true)
+      graft.corpus.CrossBook.resolveAll(s, ments, col("book"),
+        Pipeline.aliasPairs(s, dir),
+        graft.extract.Canonicalize.coocMergeEdges(ments))._1
     }),
     // E13 explicit ORDER relations surfaced as a table: deterministic
     // passages with before/after/followed statements synthesized from

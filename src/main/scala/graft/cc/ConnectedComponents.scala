@@ -2,6 +2,7 @@ package graft.cc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graph.StageStore
 
 /** Iterative min-label-propagation connected components over a string-keyed
   * undirected edge Dataset — the canonicalization engine prescribed by the
@@ -12,8 +13,8 @@ import org.apache.spark.sql.functions._
   * neighbors, then labels shortcut through themselves (path halving —
   * l(v) := l(l(v))). The frontier DataFrame is checkpointed each superstep
   * (localCheckpoint — lineage truncation so plan depth stays O(1) instead
-  * of O(supersteps)), and a (superstep, changed, active) metrics row is
-  * recorded through the supplied sink for the lineage/metrics table.
+  * of O(supersteps)), and a (superstep, changed) metrics row is recorded
+  * through the supplied store for the lineage/metrics table.
   * Converges in O(log diameter) supersteps (CanonicalizeSpec pins a
   * 1025-node chain at 11 = log2 n plus the no-change detection step);
   * alias graphs are near-star-shaped so this is 2-3 in practice. maxIter
@@ -30,39 +31,33 @@ object ConnectedComponents {
   /** @param edges  DataFrame with string columns (src, dst)
     * @param nodes  DataFrame with string column (node); superset of edge
     *               endpoints (singletons allowed)
-    * @param checkpoints  optional durable per-superstep persistence: when
-    *               set, the symmetric edge set and every superstep's label
-    *               table run through [[graft.graph.Checkpoints.stage]]
-    *               (stages `cc_sym`, `cc_labels_<k>`), so a run killed
-    *               mid-CC resumes from the last completed superstep instead
-    *               of restarting — and survives executor loss, which a
-    *               localCheckpoint does not. Default stays localCheckpoint
-    *               (lineage truncation only): right for the ephemeral
-    *               query paths, wrong for the long materialization job.
+    * @param store  the symmetric edge set and every superstep's label
+    *               table are pinned through `store.intermediates` (stages
+    *               `cc_sym`, `cc_labels_<k>`). On
+    *               [[graft.graph.Checkpoints]] a run killed mid-CC resumes
+    *               from the last completed superstep and survives executor
+    *               loss; [[graft.graph.StageStore.Local]] only truncates
+    *               lineage, which is right for the ephemeral query paths.
     * @return (assignment DataFrame (node, cluster), superstep metrics)
     */
   def run(
       spark: SparkSession,
       nodes: DataFrame,
       edges: DataFrame,
-      maxIter: Int = 20,
-      checkpoints: Option[graft.graph.Checkpoints] = None): (DataFrame, Seq[Superstep]) = {
-
-    def pin(name: String)(df: => DataFrame): DataFrame = checkpoints match {
-      case Some(ck) => ck.stage(name)(df)
-      case None => df.localCheckpoint(true)
-    }
+      store: StageStore,
+      maxIter: Int = 20): (DataFrame, Seq[Superstep]) = {
+    val pin = store.intermediates
 
     // symmetric edge set, self-contained column names; materialized once —
     // otherwise every superstep would recompute the (expensive) upstream
     // edge derivation (fuzzy self-join, alias regex scan)
-    val sym = pin("cc_sym") {
+    val sym = pin.stage("cc_sym") {
       edges.select(col("src").as("a"), col("dst").as("b"))
         .union(edges.select(col("dst").as("a"), col("src").as("b")))
         .distinct()
     }
 
-    var labels = pin("cc_labels_0") {
+    var labels = pin.stage("cc_labels_0") {
       nodes.select(col("node"), col("node").as("cluster"))
     }
     val metrics = scala.collection.mutable.ArrayBuffer.empty[Superstep]
@@ -92,7 +87,7 @@ object ConnectedComponents {
       // remove the shuffle outright; the label tables are small, so the
       // saving is the job/stage scheduling latency times the 2-3
       // supersteps of every CC run in the bench).
-      val next = pin(s"cc_labels_$step") {
+      val next = pin.stage(s"cc_labels_$step") {
         val neighborLabels = sym
           .join(prev.select(col("node").as("b"), col("cluster")), Seq("b"))
           .select(col("a").as("node"), col("cluster"),
@@ -122,6 +117,7 @@ object ConnectedComponents {
         .collect()(0)
       val changed = row.getLong(0)
       metrics += Superstep(step, changed, row.getLong(1))
+      store.recordMetric("cc_superstep", step, changed, "superstep")
       labels = next
       converged = changed == 0
     }

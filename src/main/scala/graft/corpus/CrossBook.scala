@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Proje
 import org.apache.spark.sql.execution.LogicalRDD
 import graft.extract.{Canonicalize, Linker}
 import graft.cc.ConnectedComponents
+import graft.graph.StageStore
 
 /** Cross-book entity resolution (X1-X6, corpus/resolver.py): per-book
   * mention clusters merged corpus-wide via exact-name / alias / fuzzy>=0.85
@@ -18,15 +19,16 @@ object CrossBook {
 
   /** Global entity table across books:
     * (entity, canonical_name, books_appeared, total_mentions, member_count).
-    * `bookCol` assigns each mention to a book.
+    * `bookExpr` assigns each mention to a book; `aliasPairs` and
+    * `coocEdges` are the [[Canonicalize.aliasPairs]] table of the corpus
+    * and the [[Canonicalize.coocMergeEdges]] table of these mentions.
     */
   def resolveAll(
       spark: SparkSession,
-      textualPassages: DataFrame,
       mentions: DataFrame,
       bookExpr: org.apache.spark.sql.Column,
-      pinnedAliasPairs: Option[DataFrame] = None,
-      pinnedCoocEdges: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+      aliasPairs: DataFrame,
+      coocEdges: DataFrame): (DataFrame, DataFrame) = {
     graft.Tuning.ensure(spark)
     val ratioUdf = udf((a: String, b: String) => Linker.indelRatio(a, b))
     // project BEFORE anything heavy: every consumer below needs only
@@ -40,12 +42,11 @@ object CrossBook {
       .select(Seq(col("doc_id"), col("pos"), col("book"), col("node")) ++
         (if (mAll.columns.contains("entity_type"))
            Seq(col("entity_type")) else Nil): _*)
-    // pin only a lazy mention input: cooc + grouped below would each
-    // re-run its whole lineage (q51 synthesizes its mentions per query).
-    // An already-materialized input (q37 passes the checkpointed linked
-    // stage) is re-read, not recomputed, and an eager checkpoint of the
-    // full table costs more than the scans it saves (measured round-6:
-    // the q37 pin was 0.5-1 s of pure overhead)
+    // pin only a lazy mention input. An already-materialized input (q37
+    // passes the checkpointed linked stage, q51 its pinned synthesized
+    // mentions) is re-read, not recomputed, and an eager checkpoint of the
+    // full table costs more than the scans it saves (measured round-6: the
+    // q37 pin was 0.5-1 s of pure overhead)
     val m = if (isMaterialized(mentions)) mProj else mProj.localCheckpoint(true)
     val typed =
       if (m.columns.contains("entity_type")) m
@@ -68,10 +69,7 @@ object CrossBook {
     // fuzzy edges at the cross-book 0.85 threshold (X3); blocked
     // equi-join on (first char, length) — see Canonicalize.fuzzyEdges
     val eFuzzy = Canonicalize.fuzzyEdges(nodes, 0.85, ratioUdf)
-    // session-cached alias table when the caller has one (Pipeline
-    // stage cache): q37 and q51 each re-ran this full-corpus regex scan
-    val eAlias = pinnedAliasPairs
-      .getOrElse(Canonicalize.aliasPairs(spark, textualPassages))
+    val eAlias = aliasPairs
       .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
       .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
 
@@ -97,14 +95,8 @@ object CrossBook {
         struct((col("cnt") * -1).as("nc"), col("entity_type"))).as("ntype"))
     def typeOf(end: String) = nodeTypes
       .select(col("node").as(end), col("ntype").as(s"${end}_t"))
-    // session-cached cooc edge table when the caller has one: the cooc
-    // pass depends only on the (doc_id, pos, node) rows, which are the
-    // same for the linked mention table as for the raw mention stage, so
-    // q37 reuses the clusters stage's pass instead of re-running the
-    // full-mention-table pair expansion per query
     val eConsolidate = Canonicalize.articleEdges(nodes)
-      .union(pinnedCoocEdges.getOrElse(
-        Canonicalize.coocMergeEdges(m, keyExpr = Some(col("node")))))
+      .union(coocEdges)
       .join(typeOf("src"), Seq("src"), "left")
       .join(typeOf("dst"), Seq("dst"), "left")
       .filter(col("src_t").isNull || col("dst_t").isNull ||
@@ -112,7 +104,7 @@ object CrossBook {
       .select("src", "dst")
 
     val (assignment, _) = ConnectedComponents.run(spark, nodes,
-      eFuzzy.union(eAlias).union(eConsolidate).distinct())
+      eFuzzy.union(eAlias).union(eConsolidate).distinct(), StageStore.Local)
 
     // X4 type-conflict tracking (resolver.py:329-339): clusters whose
     // member mentions carry more than one known entity type. Batch

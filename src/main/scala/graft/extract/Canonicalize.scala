@@ -4,6 +4,7 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cc.ConnectedComponents
+import graft.graph.StageStore
 
 /** Dynamic (zero-seed) entity canonicalization — reference
   * DynamicEntityResolver (extract/dynamic_resolver.py), re-expressed as
@@ -95,10 +96,8 @@ object Canonicalize {
       .agg(count(lit(1)).as("cnt"))
 
   /** The per-passage pair expansion feeding [[cooccurrence]] — one row per
-    * (passage, unordered key pair). `keyExpr` lets callers that already
-    * carry a cleaned key column (CrossBook's pinned mention table) skip
-    * the per-row cleanKey re-derivation; the stored column IS
-    * cleanKey(text), so passing it is exact.
+    * (passage, unordered key pair) over the mention key `keyExpr`
+    * (cleanKey(text), or the stored `mkey`, which is the same value).
     */
   private[graft] def pairRows(
       mentions: DataFrame, maxKeysPerPassage: Int,
@@ -157,11 +156,9 @@ object Canonicalize {
   }
 
   /** Co-occurrence >= 3 passing the merge heuristic (D2-D4, D3 default
-    * min_cooccurrence=3, dynamic_resolver.py:196).
+    * min_cooccurrence=3, dynamic_resolver.py:196), keyed by [[keyOf]].
     */
-  private[graft] def coocMergeEdges(
-      mentions: DataFrame,
-      keyExpr: Option[org.apache.spark.sql.Column] = None): DataFrame =
+  def coocMergeEdges(mentions: DataFrame): DataFrame =
     // shouldMerge depends only on (src, dst), so it commutes with the
     // pair-count aggregate: filtering BEFORE the groupBy shuffles only the
     // containment-passing pairs (rare — different co-occurring names
@@ -169,8 +166,7 @@ object Canonicalize {
     // (guide §2.3 aggregate-before-shuffle / project-early; the unfiltered
     // pair count was the single largest piece of the q37/q51 probe).
     // count(filter(pairs)) >= 3 == filter(count(pairs) >= 3) exactly.
-    pairRows(mentions, 64,
-      keyExpr.getOrElse(Linker.cleanKey(col("text"))))
+    pairRows(mentions, 64, keyOf(mentions))
       .filter(shouldMerge(col("src"), col("dst")))
       .groupBy("src", "dst")
       .agg(count(lit(1)).as("cnt"))
@@ -187,25 +183,14 @@ object Canonicalize {
     if (mentions.columns.contains("mkey")) col("mkey")
     else Linker.cleanKey(col("text"))
 
-  /** Build the full alias-similarity edge set over mention keys.
-    * `pinnedNodes`: an already-materialized distinct node table — callers
-    * that also need the node set (CC seeding) pass theirs so the
-    * full-mention-table distinct shuffle runs exactly once.
+  /** Build the full alias-similarity edge set over the distinct mention
+    * keys `nodes` (column `node`): article-strip and fuzzy edges derived
+    * from the nodes, plus the explicit alias pairs whose two ends are both
+    * nodes, plus the co-occurrence merge edges.
     */
-  def edges(
-      spark: SparkSession,
-      textualPassages: DataFrame,
-      mentions: DataFrame,
-      pinnedNodes: Option[DataFrame] = None,
-      pinnedAliasPairs: Option[DataFrame] = None,
-      pinnedCoocEdges: Option[DataFrame] = None): DataFrame = {
+  def edges(nodes: DataFrame, aliasPairs: DataFrame,
+      coocEdges: DataFrame): DataFrame = {
     val ratioUdf = udf((a: String, b: String) => Linker.indelRatio(a, b))
-    // distinct node keys: a shuffle over the full mention table — pin the
-    // (tiny) result once, or every edge family below re-runs it inside the
-    // union plan (profiled 6x recompute = most of the edge-build time)
-    val nodes = pinnedNodes.getOrElse(
-      mentions.select(keyOf(mentions).as("node"))
-        .distinct().localCheckpoint(true))
 
     // 1. article-strip equality
     val eArticle = articleEdges(nodes)
@@ -219,58 +204,37 @@ object Canonicalize {
     //    at corpus scale (round-1 VERDICT.md scale issue #5).
     val eFuzzy = fuzzyEdges(nodes, 0.90, ratioUdf)
 
-    // 3. explicit alias statements — callers with a session-cached alias
-    //    table (Pipeline.aliasPairs) pass it so the full-corpus gated
-    //    regex scan runs once per session, not once per edge build
-    val eAlias = pinnedAliasPairs.getOrElse(aliasPairs(spark, textualPassages))
+    // 3. explicit alias statements between two known nodes
+    val eAlias = aliasPairs
       .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
       .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
       .select("src", "dst")
 
-    // 4. co-occurrence >= 3 passing the merge heuristic — callers with a
-    //    session-cached edge table (Pipeline.coocEdges) pass it so the
-    //    full-mention-table pair expansion runs once per session
-    val eCooc = pinnedCoocEdges.getOrElse(
-      coocMergeEdges(mentions, keyExpr = Some(keyOf(mentions))))
-
-    eArticle.union(eFuzzy).union(eAlias).union(eCooc).distinct()
+    // 4. co-occurrence >= 3 passing the merge heuristic
+    eArticle.union(eFuzzy).union(eAlias).union(coocEdges).distinct()
   }
 
   /** Full canonicalization: (node -> cluster) assignment plus superstep
-    * metrics. Cluster id = min member key (deterministic). With
-    * `checkpoints` set, the edge derivation and every CC superstep persist
-    * through the checkpoint table (stages `cc_edges`, `cc_sym`,
-    * `cc_labels_<k>`) so a killed run resumes mid-CC.
+    * metrics. Cluster id = min member key (deterministic). `aliasPairs`
+    * and `coocEdges` are the [[aliasPairs]] and [[coocMergeEdges]] tables
+    * of the same corpus. The edge set (`cc_edges`) and every CC superstep
+    * are pinned through `store.intermediates`: on [[graft.graph.Checkpoints]]
+    * a killed run resumes mid-CC.
     */
   def clusters(
       spark: SparkSession,
-      textualPassages: DataFrame,
       mentions: DataFrame,
-      checkpoints: Option[graft.graph.Checkpoints] = None,
-      pinnedAliasPairs: Option[DataFrame] = None,
-      pinnedCoocEdges: Option[DataFrame] = None)
-      : (DataFrame, Seq[ConnectedComponents.Superstep]) = {
-    // materialize the mention stage once — nodes and three of the four
-    // edge families all read it; the distinct node set is pinned once and
-    // shared between the edge builder and the CC seed. The pre-derived
-    // mkey rides along when the input has one (see keyOf).
-    val m = mentions
-      .select(Seq(col("doc_id"), col("pos"), col("text")) ++
-        (if (mentions.columns.contains("mkey")) Seq(col("mkey")) else Nil): _*)
-      .localCheckpoint(true)
-    val nodes = m.select(keyOf(m).as("node"))
+      aliasPairs: DataFrame,
+      coocEdges: DataFrame,
+      store: StageStore): (DataFrame, Seq[ConnectedComponents.Superstep]) = {
+    // the distinct node set is pinned once and shared between the edge
+    // builder and the CC seed
+    val nodes = mentions.select(keyOf(mentions).as("node"))
       .distinct().localCheckpoint(true)
-    val e = checkpoints match {
-      case Some(ck) =>
-        ck.stage("cc_edges") {
-          edges(spark, textualPassages, m, Some(nodes), pinnedAliasPairs,
-            pinnedCoocEdges)
-        }
-      case None =>
-        edges(spark, textualPassages, m, Some(nodes), pinnedAliasPairs,
-          pinnedCoocEdges)
+    val e = store.intermediates.stage("cc_edges") {
+      edges(nodes, aliasPairs, coocEdges)
     }
-    ConnectedComponents.run(spark, nodes, e, checkpoints = checkpoints)
+    ConnectedComponents.run(spark, nodes, e, store)
   }
 
   /** D8 dynamic-registry resolve (dynamic_resolver.py:352-389): resolve
@@ -303,15 +267,6 @@ object Canonicalize {
         col("resolved__._1").as("cluster"),
         col("resolved__._2").as("resolve_confidence")): _*)
   }
-
-  /** Cluster registry: representative name = first-seen mention text by
-    * (doc_id, pos, start); sizes and mention counts per cluster.
-    */
-  def registry(
-      spark: SparkSession,
-      mentions: DataFrame,
-      assignment: DataFrame): DataFrame =
-    registryFromNodes(registryNodes(mentions, assignment))
 
   /** First level of the registry aggregate: one row per (cluster, node)
     * with its first-seen mention and count — the full-mention-table pass.
@@ -346,7 +301,10 @@ object Canonicalize {
         count(lit(1)).as("cnt"))
   }
 
-  /** Second level of the registry aggregate over [[registryNodes]]. */
+  /** Second level of the registry aggregate over [[registryNodes]]: the
+    * cluster registry, with representative name = first-seen mention text
+    * by (doc_id, pos, start), and sizes and mention counts per cluster.
+    */
   def registryFromNodes(nodeTable: DataFrame): DataFrame =
     nodeTable
       .groupBy(col("cluster"))

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
 final class Checkpoints(
     spark: SparkSession,
     warehouse: String,
-    fingerprint: String = "") {
+    fingerprint: String = "") extends StageStore {
 
   private val ckDir = s"$warehouse/_checkpoints"
   private val PidCol = "__graft_pid"
@@ -136,6 +136,10 @@ final class Checkpoints(
         lit(status).as("status"),
         lit(fingerprint).as("fingerprint"),
         current_timestamp().as("updated_at")))
+
+  /** Intermediates (CC supersteps) persist here too, so a run killed
+    * mid-CC resumes from the last completed superstep. */
+  def intermediates: StageStore = this
 
   /** Record an arbitrary metrics row (e.g. CC superstep convergence). */
   def recordMetric(stage: String, partitionId: Int, rowsOut: Long,

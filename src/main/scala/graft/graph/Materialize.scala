@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Pipeline
-import graft.extract.Canonicalize
 
 /** Graph materialization as edge/vertex tables with MERGE-with-aggregate
   * semantics — the table re-expression of the reference's Neo4j writers
@@ -169,13 +168,15 @@ object Materialize {
   }
 
   /** G7 passage style columns (writer.py:432-467): passage vertices joined
-    * with the classifier's primary type, word count and dialogue flag.
+    * with the classifier's primary type (`classified`, the
+    * Classifier.classifyPassages table of `passages`), word count and
+    * dialogue flag.
     */
   def passageStyle(
-      spark: SparkSession,
       passageVertices: DataFrame,
+      classified: DataFrame,
       passages: DataFrame): DataFrame = {
-    val cls = graft.style.Classifier.classifyPassages(spark, passages)
+    val cls = classified
       .select(col("doc_id"), col("pos"),
         col("primary_type").as("passage_type"))
     val metrics = passages.select(col("doc_id"), col("pos"),
@@ -357,14 +358,22 @@ object Materialize {
   def runAll(spark: SparkSession, sfDir: String, warehouse: String): DataFrame =
     runAllReplicated(spark, sfDir, warehouse, rep = 1)
 
+  /** Version of the warehouse layout, folded into every fingerprint, so a
+    * resume never loads stages written in an older layout. Layout 2: the
+    * shared stages come from `Pipeline.Stages` (mentions carry `mkey`,
+    * linked carries `vid`, vertices carry `first_seen_doc`).
+    */
+  private val WarehouseLayout = 2
+
   /** [[runAll]] over the rep-x replicated corpus (the scaling-bench shape).
     * Keeps the fingerprint scheme and the per-rep warehouse subtree in one
-    * place: the input fingerprint is sf dir + source parquet size (+ rep) —
-    * a resumed run against different input must recompute, not load stale
-    * stages — and rep > 1 gets its own warehouse subtree (<wh>/rep<rep>)
-    * because stage OUTPUT paths are keyed by stage name only, so sharing a
-    * tree across reps would let a fingerprint-mismatched rerun overwrite
-    * parquet that an older fingerprint's checkpoint rows still claim.
+    * place: the input fingerprint is sf dir + source parquet size (+ rep)
+    * + [[WarehouseLayout]] — a resumed run against different input must
+    * recompute, not load stale stages — and rep > 1 gets its own warehouse
+    * subtree (<wh>/rep<rep>) because stage OUTPUT paths are keyed by stage
+    * name only, so sharing a tree across reps would let a
+    * fingerprint-mismatched rerun overwrite parquet that an older
+    * fingerprint's checkpoint rows still claim.
     */
   def runAllReplicated(spark: SparkSession, sfDir: String,
       warehouse: String, rep: Int): DataFrame = {
@@ -374,54 +383,44 @@ object Materialize {
     // byte-for-byte the same SIZE with different content — without the
     // mtime a resume would silently load the old corpus's stages
     // (round-5 review)
-    val fp = s"$sfDir#${li.length}#${li.lastModified}"
+    val fp = s"$sfDir#${li.length}#${li.lastModified}#layout$WarehouseLayout"
     if (rep <= 1)
-      runAllFrom(spark, Pipeline.textual(spark, sfDir), warehouse, fp)
+      runAllFrom(spark, sfDir, Pipeline.textual(spark, sfDir), warehouse, fp)
     else
-      runAllFrom(spark, Pipeline.textualReplicated(spark, sfDir, rep),
+      runAllFrom(spark, sfDir, Pipeline.textualReplicated(spark, sfDir, rep),
         s"$warehouse/rep$rep", s"$fp#rep$rep")
   }
 
   /** [[runAll]] over an explicit textual-passage source — the rep-N
     * scaling evidence path (VERDICT r04 #4): the bench's replicated corpus
-    * (or any stored passage table) drives the same 19-stage checkpointed
-    * job, with the replication factor folded into the fingerprint so a
-    * resumed run at a different rep recomputes.
+    * (or any stored passage table) drives the same checkpointed job, with
+    * the replication factor folded into the fingerprint so a resumed run
+    * at a different rep recomputes.
+    *
+    * The shared nodes (mentions, linked, alias_pairs, cooc_edges,
+    * clusters, vertices, dialogue, voice_profiles, events, classified)
+    * are `Pipeline.Stages` over the durable store, with `textual` given
+    * and stored as `passages`; the stages after them exist only here.
+    * `sfDir` is the graph's input dir; every node built here sits below
+    * the given `textual`, so none reads it.
     */
-  def runAllFrom(spark: SparkSession, textual: => DataFrame,
+  def runAllFrom(spark: SparkSession, sfDir: String, textual: => DataFrame,
       warehouse: String, fingerprint: String): DataFrame = {
     val ck = new Checkpoints(spark, warehouse, fingerprint)
-
     val passages = ck.stage("passages") { textual }
-    val mentions = ck.stage("mentions") {
-      graft.extract.Mentions.fromPassages(spark, passages).toDF()
-    }
-    val linked = ck.stage("linked") {
-      graft.extract.Linker.link(spark, mentions)
-    }
+    val g = Pipeline.graph(spark, sfDir, ck, Map("textual" -> passages))
+    val linked = g("linked")
     val triples = ck.stage("triples") {
       graft.extract.Triples.fromPassagesFused(spark, passages).toDF()
     }
-    ck.stage("clusters") {
-      // supersteps persist through the checkpoint table (cc_edges, cc_sym,
-      // cc_labels_<k>), so a run killed mid-CC resumes from the last
-      // completed superstep — localCheckpoint would die with the executors
-      val (assignment, steps) =
-        Canonicalize.clusters(spark, passages, mentions, Some(ck))
-      steps.foreach(s =>
-        ck.recordMetric("cc_superstep", s.superstep, s.changed, "superstep"))
-      assignment
-    }
-    val vertices = ck.stage("vertices") { vertexDelta(linked) }
+    g("clusters")
+    val vertices = g("vertices")
     val pv = ck.stage("passage_vertices") { passageVertices(passages, triples) }
-    ck.stage("passage_style") { passageStyle(spark, pv, passages) }
+    ck.stage("passage_style") { passageStyle(pv, g("classified"), passages) }
     ck.stage("book_style") { bookStyle(spark, passages) }
-    val dialogue = ck.stage("dialogue") {
-      graft.voice.Dialogue.fromPassages(spark, passages).toDF()
-    }
+    val dialogue = g("dialogue")
     ck.stage("character_voice") {
-      characterVoice(spark, vertices,
-        graft.voice.Dialogue.voiceProfiles(spark, dialogue))
+      characterVoice(spark, vertices, g("voice_profiles"))
     }
     ck.stage("mentioned_in") { mentionedInEdges(linked) }
     // one dialogueGraph build feeding both checkpoint stages (VERDICT r03
@@ -429,9 +428,7 @@ object Materialize {
     lazy val dlgGraph = dialogueGraph(spark, dialogue)
     ck.stage("dialogue_vertices") { dlgGraph._1 }
     ck.stage("dialogue_edges") { dlgGraph._2 }
-    val events = ck.stage("events") {
-      graft.lore.Events.fromPassages(spark, passages).toDF()
-    }
+    val events = g("events")
     ck.stage("event_vertices") { eventVertices(events) }
     ck.stage("event_relations") {
       eventRelationEdges(graft.lore.Events.inferOrdering(events))

@@ -168,17 +168,9 @@ object DocsSynth {
         mediaRef.as("media_ref"), col("offset"))
   }
 
-  /** The assembled input table: docs(doc_id, spans). Spans are ordered by
-    * pos via array_sort on a (pos, ...) struct, then projected down — fully
-    * deterministic, no driver-side collection.
-    */
-  def docs(spark: SparkSession, sfDir: String): DataFrame =
-    docsFromSpanRows(spanRows(spark, sfDir))
-
-  /** [[docs]] over an already-materialized span-row table — lets callers
-    * with a cached/stored spanRows stage (Pipeline) assemble docs without
-    * re-running the synthesis (the bench's stage itemization previously
-    * double-counted it).
+  /** The assembled input table docs(doc_id, spans) over a [[spanRows]]
+    * table. Spans are ordered by pos via array_sort on a (pos, ...) struct,
+    * then projected down — fully deterministic, no driver-side collection.
     */
   def docsFromSpanRows(spanRows: DataFrame): DataFrame = {
     spanRows

@@ -95,7 +95,7 @@ object Fingerprint {
   def assemble(
       spark: SparkSession, passages: DataFrame,
       corpusCol: String,
-      preClassified: Option[DataFrame] = None): DataFrame = {
+      classified: DataFrame): DataFrame = {
     import graft.style.Metrics.floor4
     val p = passages.withColumn("corpus", col(corpusCol))
     // ONE per-corpus metric pass (guide §2.4 share-one-exchange): the
@@ -143,11 +143,9 @@ object Fingerprint {
           / col("total_words") * 1000).as("invented_word_density"))
     val types = Seq("dialogue", "action", "description", "travel",
       "battle", "reflection", "unknown")
-    // classifyPassages only reads (doc_id, pos, text), so a session-cached
-    // classification over the same passages (Pipeline.classified) is
-    // row-identical — callers pass it to share the six-scorer pass
-    val cls = preClassified
-      .getOrElse(graft.style.Classifier.classifyPassages(spark, p))
+    // `classified` is Classifier.classifyPassages over the same passages
+    // (Pipeline.classified), keyed by (doc_id, pos)
+    val cls = classified
       .join(p.select("doc_id", "pos", "corpus"), Seq("doc_id", "pos"))
       .groupBy("corpus")
       .agg(

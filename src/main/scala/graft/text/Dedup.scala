@@ -70,16 +70,20 @@ object Dedup {
             element_at(words, i + 3)))))
   }
 
-  /** Trigram-Jaccard similarity of each doc vs its successor (equi-join on
-    * id+1 — co-partitioned, no window over a global sort).
+  /** The shingle table (doc_id: long, sh: distinct trigram shingles) of a
+    * (doc_id, text) document table — the input of [[consecutiveJaccard]]
+    * and [[minhashNearDups]].
     */
-  def consecutiveJaccard(docs: DataFrame, idCol: String, textCol: String,
-      pinnedShingles: Option[DataFrame] = None): DataFrame = {
-    // session-cached shingle stage when the caller has one: both sides of
-    // the successor join read the shingle table, so the lazy form
-    // shingles the full document table twice per evaluation
-    val sh = pinnedShingles.getOrElse(docs.select(col(idCol).as("doc_id"),
-      shingles(col(textCol)).as("sh")))
+  def shingleTable(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").cast("long").as("doc_id"),
+      shingles(col("text")).as("sh"))
+
+  /** Trigram-Jaccard similarity of each doc vs its successor (equi-join on
+    * id+1 — co-partitioned, no window over a global sort) over a
+    * [[shingleTable]]. Both sides of the join read the table, so pass a
+    * pinned one (Pipeline.shingles).
+    */
+  def consecutiveJaccard(sh: DataFrame): DataFrame = {
     val a = sh.select(col("doc_id"), col("sh").as("sh_a"))
     val b = sh.select((col("doc_id") - 1).as("doc_id"), col("doc_id").as("next_doc_id"),
       col("sh").as("sh_b"))
@@ -120,29 +124,18 @@ object Dedup {
   }
 
   /** MinHash+LSH near-duplicate candidate pairs, verified by exact
-    * shingle Jaccard >= `threshold`. Pipeline shape:
-    * shingle -> minhash signature (mapPartitions) -> explode bands ->
-    * groupBy (band, band-signature) bucket join -> exact verify.
+    * shingle Jaccard >= `threshold`, over a [[shingleTable]]. Pipeline
+    * shape: minhash signature (mapPartitions) -> explode bands ->
+    * groupBy (band, band-signature) bucket join -> exact verify. The
+    * table feeds the banding pass AND both sides of the exact-verify
+    * join — left lazy, the shingling runs three times (profiled ~2/3 of
+    * q26's wall) — so pass a pinned one (Pipeline.shingles).
     */
   def minhashNearDups(
       spark: SparkSession,
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.7,
-      pinnedShingles: Option[DataFrame] = None): DataFrame = {
+      sh: DataFrame,
+      threshold: Double = 0.7): DataFrame = {
     import spark.implicits._
-    // Pin the shingle table: it feeds the banding pass AND both sides of
-    // the exact-verify join — left lazy, the per-doc split/transform/
-    // distinct shingling runs three times (profiled ~2/3 of q26's wall).
-    // At scale this is the standard persist-the-feature-table step; the
-    // eager localCheckpoint also truncates lineage like the Pipeline
-    // stage cache does. Callers with a session-cached shingle stage
-    // (Pipeline.shingles) pass it so the shingling runs once per session.
-    val sh = pinnedShingles.getOrElse(
-      docs.select(col(idCol).cast("long").as("doc_id"),
-        shingles(col(textCol)).as("sh"))
-        .localCheckpoint(true))
 
     val banded = sh.as[(Long, Seq[String])].mapPartitions { it =>
       it.flatMap { case (id, shingleSet) =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.{Pipeline, SparkEntry}
 
 /** Supplementary measurement main (guide §1.4) — NOT part of the frozen
@@ -16,8 +15,9 @@ import graft.{Pipeline, SparkEntry}
   *  - per-query passes and the per-stage first-touch builds are both
   *    emitted, with all passes retained (not just the min).
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  * Usage: SPARK_GRAFT_SF_DIR=... [SPARK_GRAFT_CPUS=n] \
   *   sbt "runMain graft.tools.BenchExtra [query ...]"
+  * SPARK_GRAFT_CPUS defaults to the host's cores.
   * With no args, all declared queries run. Output: one JSON line
   * {"queries_noop":{name:[passes...]},"stage_build_sec":{...},"sf":...}.
   */
@@ -31,35 +31,15 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_EXTRA_PASSES", "2").toInt
-    val spark = ToolSession("graft-bench-extra", cpus)
+    val spark = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(ToolSession("graft-bench-extra"))(
+        c => ToolSession("graft-bench-extra", c.toInt))
 
-    // first-touch stage builds, in dependency order (superset of Bench's
-    // frozen list: includes the stages added by the optimization rounds)
-    val stages = Seq[(String, (SparkSession, String) => Any)](
-      "spanRows" -> ((s, d) => Pipeline.spanRows(s, d)),
-      "docs" -> ((s, d) => Pipeline.docs(s, d)),
-      "textual" -> ((s, d) => Pipeline.textual(s, d)),
-      "mentions" -> ((s, d) => Pipeline.mentions(s, d)),
-      "linked" -> ((s, d) => Pipeline.linked(s, d)),
-      "alias_pairs" -> ((s, d) => Pipeline.aliasPairs(s, d)),
-      "clusters" -> ((s, d) => Pipeline.clusterAssignment(s, d)),
-      "wb_categories" -> ((s, d) => Pipeline.wbCategories(s, d)),
-      "wb_rules" -> ((s, d) => Pipeline.wbRules(s, d)),
-      "dialogue" -> ((s, d) => Pipeline.dialogue(s, d)),
-      "events" -> ((s, d) => Pipeline.events(s, d)),
-      "timeline" -> ((s, d) => Pipeline.timeline(s, d)),
-      "classified" -> ((s, d) => Pipeline.classified(s, d)),
-      "cooc_edges" -> ((s, d) => Pipeline.coocEdges(s, d)),
-      "vertices" -> ((s, d) => Pipeline.vertices(s, d)),
-      "shingles" -> ((s, d) => Pipeline.shingles(s, d)),
-      "voice_profiles" -> ((s, d) => Pipeline.voiceProfiles(s, d)),
-      "dialogue_word_counts" -> ((s, d) => Pipeline.dialogueWordCounts(s, d)),
-      "registry_nodes" -> ((s, d) => Pipeline.registryNodes(s, d)))
-    val stageJson = stages.map { case (name, f) =>
+    // first-touch builds of every declared stage, in dependency order
+    val stageJson = Pipeline.Stages.map(_.name).map { name =>
       spark.sparkContext.setJobDescription(s"stage: $name")
-      val t = timed(f(spark, sfDir))
+      val t = timed(Pipeline.stage(spark, sfDir, name))
       "\"" + name + f"\":$t%.3f"
     }.mkString("{", ",", "}")
 

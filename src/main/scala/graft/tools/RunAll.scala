@@ -8,7 +8,7 @@ package graft.tools
   *
   * Usage: runMain graft.tools.RunAll <sfDir> <warehouseDir> [cpus] [rep]
   *
-  * `rep` > 1 drives the SAME 19-stage job over the rep-x replicated
+  * `rep` > 1 drives the SAME checkpointed job over the rep-x replicated
   * corpus (doc ids suffixed, the scaling-bench corpus shape) — the
   * stage-linear scale evidence for the materialization job itself, not
   * just the extraction kernel (VERDICT r04 #4). A rep > 1 run gets its

@@ -213,17 +213,12 @@ object Dialogue {
   }
 
   /** V9 analyzer corpus stats (analyzer.py:120-150): one row with the
-    * dialogue totals and the attribution rate.
+    * dialogue totals and the attribution rate; `profiles` is the
+    * [[voiceProfiles]] table of `dialogue`.
     */
-  def voiceStats(
-      spark: SparkSession,
-      dialogue: DataFrame,
-      preProfiles: Option[DataFrame] = None): DataFrame = {
+  def voiceStats(dialogue: DataFrame, profiles: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    // callers with a session-cached profile table (Pipeline.voiceProfiles)
-    // pass it so the two-pass profile aggregation runs once per session
-    val profiles = preProfiles.getOrElse(voiceProfiles(spark, dialogue))
-      .agg(count(lit(1)).as("total_characters"))
+    val characters = profiles.agg(count(lit(1)).as("total_characters"))
     dialogue.agg(
         count(lit(1)).as("total_dialogue_lines"),
         sum(when(col("speaker").isNull, 1L).otherwise(0L))
@@ -232,6 +227,6 @@ object Dialogue {
         graft.style.Metrics.floor4(
           (col("total_dialogue_lines") - col("unattributed_lines"))
             .cast("double") / col("total_dialogue_lines")))
-      .crossJoin(profiles)
+      .crossJoin(characters)
   }
 }

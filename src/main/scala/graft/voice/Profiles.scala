@@ -13,12 +13,12 @@ object Profiles {
   /** Per-(speaker, word) occurrence counts over the dialogue lines — the
     * one full-dialogue explode + aggregate pass both word-ranking queries
     * start from. Tokens are split(lower(quote), "\s+"), and empty tokens
-    * are dropped here. That is safe: [[distinctiveWords]] and [[topWords]]
-    * each filter by their own length threshold, which no empty token
-    * passes, so this table is exactly equivalent to both queries' inline
-    * tokenizations (with and without trim — trimming only changes empty
-    * tokens). Pipeline caches it per session so q33 and q42 share one
-    * pass.
+    * are dropped here. That is safe: [[distinctiveWordsFromCounts]] and
+    * [[topWordsFromCounts]] each filter by their own length threshold,
+    * which no empty token passes, so this table is exactly equivalent to
+    * both queries' inline tokenizations (with and without trim — trimming
+    * only changes empty tokens). Pipeline caches it per session so q33 and
+    * q42 share one pass.
     */
   def wordCounts(dialogue: DataFrame): DataFrame =
     dialogue
@@ -30,22 +30,16 @@ object Profiles {
       .agg(count(lit(1)).as("cnt"))
 
   /** V6 distinctive words: TF / (1 + other-speaker-usage / n_speakers),
-    * min count 2, top N per speaker (profile.py:280-316). One shuffle to
-    * (speaker, word) counts; the per-word speaker document frequency is a
-    * second small aggregate; ranking is a window.
-    */
-  def distinctiveWords(dialogue: DataFrame, topN: Int = 10): DataFrame =
-    distinctiveWordsFromCounts(wordCounts(dialogue).localCheckpoint(true), topN)
-
-  /** TF/DF distinctive-word scores over a pinned [[wordCounts]] table.
-    * The count table must be materialized (session stage or checkpoint):
-    * it feeds the score rows, the per-speaker totals, the document
-    * frequencies AND the speaker count — left lazy, the planner re-runs
-    * the explode + hash aggregate over every quote once per consumer
-    * (4 identical subtrees in the physical plan). The pinned table is
-    * vocabulary-sized (distinct (speaker, word)), sub-linear in corpus,
-    * same pattern as the pinned MinHash shingle table (guide §2.4
-    * share-one-exchange).
+    * min count 2, top N per speaker (profile.py:280-316), over a pinned
+    * [[wordCounts]] table; the per-word speaker document frequency is a
+    * second small aggregate; ranking is a window. The count table must be
+    * materialized (session stage or checkpoint): it feeds the score rows,
+    * the per-speaker totals, the document frequencies AND the speaker
+    * count — left lazy, the planner re-runs the explode + hash aggregate
+    * over every quote once per consumer (4 identical subtrees in the
+    * physical plan). The pinned table is vocabulary-sized (distinct
+    * (speaker, word)), sub-linear in corpus, same pattern as the pinned
+    * MinHash shingle table (guide §2.4 share-one-exchange).
     */
   def distinctiveWordsFromCounts(counts: DataFrame, topN: Int = 10): DataFrame = {
     val charTotals = counts.groupBy("speaker")
@@ -108,16 +102,11 @@ object Profiles {
   /** V5 top words (profile.py:181-190): per speaker, the 20 most frequent
     * lowercase whitespace tokens longer than 2 chars outside the
     * reference's stoplist, ranked (count desc, word asc — deterministic
-    * stand-in for Python's sort stability).
-    */
-  def topWords(dialogue: DataFrame, topN: Int = 20): DataFrame =
-    topWordsFromCounts(wordCounts(dialogue), topN)
-
-  /** Top words over a shared [[wordCounts]] table. Filtering the counts
-    * (length > 2, stoplist) is exact: both predicates depend on the word
-    * alone, so they commute with the (speaker, word) aggregate, and the
-    * count table's tokenization is occurrence-identical to the inline
-    * split (see [[wordCounts]] on trim/empty tokens).
+    * stand-in for Python's sort stability), over a [[wordCounts]] table.
+    * Filtering the counts (length > 2, stoplist) is exact: both predicates
+    * depend on the word alone, so they commute with the (speaker, word)
+    * aggregate, and the count table's tokenization is occurrence-identical
+    * to the inline split (see [[wordCounts]] on trim/empty tokens).
     */
   def topWordsFromCounts(counts: DataFrame, topN: Int = 20): DataFrame = {
     counts

@@ -241,17 +241,14 @@ object WorldBible {
 
   /** Passages carrying a given world-bible category score — the
     * by_category grouping of the reference pipeline (extractor.py:127-133).
-    * `cats` lets callers supply an already-materialized [[categories]]
-    * table (the Pipeline stage cache) so the per-passage classify pass
-    * runs once per session instead of once per consumer query.
+    * `cats` is the [[categories]] table of `passages` (the Pipeline stage
+    * `wb_categories`, so the per-passage classify pass runs once per
+    * session). The W-family functions below all take it.
     */
   private def categorized(
-      spark: SparkSession, passages: DataFrame, category: String,
-      cats: Option[DataFrame] = None): DataFrame =
+      passages: DataFrame, category: String, cats: DataFrame): DataFrame =
     passages.join(
-      cats.getOrElse(categories(spark, passages))
-        .filter(col("category") === category)
-        .select("doc_id", "pos"),
+      cats.filter(col("category") === category).select("doc_id", "pos"),
       Seq("doc_id", "pos"), "left_semi")
 
   /** W8 cultures (extractor.py:302-349): culture-categorized passages
@@ -260,9 +257,8 @@ object WorldBible {
     * extraction is a no-op). A passage may join several groups, exactly
     * like the reference's loop.
     */
-  def cultures(spark: SparkSession, passages: DataFrame,
-      cats: Option[DataFrame] = None): DataFrame = {
-    val cult = categorized(spark, passages, "culture", cats)
+  def cultures(passages: DataFrame, cats: DataFrame): DataFrame = {
+    val cult = categorized(passages, "culture", cats)
       .withColumn("lw", lower(col("text")))
     // ONE scan instead of a six-leg union: per passage, emit the name of
     // every people whose keyword group matches (null when it does not),
@@ -287,9 +283,8 @@ object WorldBible {
     * Per-row classification — the assembled single system is
     * [[magicSystem]].
     */
-  def magicPassages(spark: SparkSession, passages: DataFrame,
-      cats: Option[DataFrame] = None): DataFrame =
-    magicKinds(spark, passages, cats)
+  def magicPassages(passages: DataFrame, cats: DataFrame): DataFrame =
+    magicKinds(passages, cats)
       .filter(col("kind").isNotNull)
       .select("doc_id", "pos", "kind")
 
@@ -298,9 +293,8 @@ object WorldBible {
     * [[magicSystem]] (round-5 review: the when-chain was duplicated
     * verbatim and could silently diverge). Null kind = source-only row.
     */
-  private def magicKinds(spark: SparkSession, passages: DataFrame,
-      cats: Option[DataFrame]): DataFrame =
-    categorized(spark, passages, "magic", cats)
+  private def magicKinds(passages: DataFrame, cats: DataFrame): DataFrame =
+    categorized(passages, "magic", cats)
       .withColumn("lw", lower(col("text")))
       .withColumn("kind",
         when(col("lw").contains("cannot") || col("lw").contains("forbidden"),
@@ -310,12 +304,10 @@ object WorldBible {
 
   /** The reference's single assembled MagicSystem row: first-5 ability and
     * limitation texts in (doc_id, pos) order, 100-char truncated
-    * (extractor.py:368-381). `cats` shares a classify pass like the rest
-    * of the W-family.
+    * (extractor.py:368-381).
     */
-  def magicSystem(spark: SparkSession, passages: DataFrame,
-      cats: Option[DataFrame] = None): DataFrame = {
-    val rows = magicKinds(spark, passages, cats)
+  def magicSystem(passages: DataFrame, cats: DataFrame): DataFrame = {
+    val rows = magicKinds(passages, cats)
       .withColumn("seen", concat(col("doc_id"), lit("#"),
         lpad(col("pos").cast("string"), 19, "0")))
       .withColumn("t", substring(col("text"), 1, 100))
@@ -341,9 +333,9 @@ object WorldBible {
     Pattern.CASE_INSENSITIVE)
 
   def geography(spark: SparkSession, passages: DataFrame,
-      cats: Option[DataFrame] = None): DataFrame = {
+      cats: DataFrame): DataFrame = {
     import spark.implicits._
-    val geo = categorized(spark, passages, "geography", cats)
+    val geo = categorized(passages, "geography", cats)
     val names = geo.select("doc_id", "pos", "text").as[(String, Int, String)]
       .mapPartitions(_.flatMap { case (d, p, t) =>
         val m = LocationPattern.matcher(t)
@@ -381,7 +373,7 @@ object WorldBible {
   /** Spark stage: extracted world rules — W4-deduped matches restricted to
     * the five qualifying pattern names (extractor.py:268-300), one row per
     * (passage, rule). Corpus-level text dedup is the rules-table aggregate
-    * (see rulesTable).
+    * (see [[rulesTableFrom]]).
     */
   def worldRules(spark: SparkSession, passages: DataFrame): DataFrame = {
     import spark.implicits._
@@ -394,16 +386,10 @@ object WorldBible {
       .dropDuplicates("doc_id", "pos", "pattern_name", "rule_text")
   }
 
-  /** Corpus-level rules table — the lore checker's rule cache (reference
-    * checker.py:221-235 over the bible's per-category deduped rules): one
-    * row per distinct lower(rule text).
+  /** Corpus-level rules table over a [[worldRules]] table — the lore
+    * checker's rule cache (reference checker.py:221-235 over the bible's
+    * per-category deduped rules): one row per distinct lower(rule text).
     */
-  def rulesTable(spark: SparkSession, passages: DataFrame): DataFrame =
-    rulesTableFrom(worldRules(spark, passages))
-
-  /** [[rulesTable]] over an already-materialized [[worldRules]] table —
-    * lets the lore checker share the Pipeline's cached rules stage
-    * instead of re-running the extractAll pass. */
   def rulesTableFrom(worldRules: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     worldRules

@@ -1,6 +1,7 @@
 package graft.corpus
 
 import graft.SparkSpec
+import graft.extract.Canonicalize
 import org.apache.spark.sql.functions._
 
 /** X4 conflicts/book_clusters, X7 totals, S8 catalog persist. */
@@ -15,8 +16,10 @@ class CorpusSpec extends SparkSpec {
       ("d1", 0, "Gondor", "character"),
       ("d2", 0, "Bree", "place"))
       .toDF("doc_id", "pos", "text", "entity_type")
-    val (entities, assignment) = CrossBook.resolveAll(spark, passages,
-      mentions, pmod(substring(col("doc_id"), 2, 9).cast("long"), lit(4L)))
+    val (entities, assignment) = CrossBook.resolveAll(spark, mentions,
+      pmod(substring(col("doc_id"), 2, 9).cast("long"), lit(4L)),
+      Canonicalize.aliasPairs(spark, passages),
+      Canonicalize.coocMergeEdges(mentions))
     val e = entities.collect()
       .map(r => r.getString(0) ->
         ((r.getAs[Long]("books_appeared"), r.getAs[Long]("type_conflicts"))))
@@ -49,8 +52,10 @@ class CorpusSpec extends SparkSpec {
   private def crossBookEntities(mentions: org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
     val passages = Seq(("d1", 0, "x")).toDF("doc_id", "pos", "text")
-    CrossBook.resolveAll(spark, passages, mentions,
-      pmod(substring(col("doc_id"), 2, 9).cast("long"), lit(4L)))
+    CrossBook.resolveAll(spark, mentions,
+      pmod(substring(col("doc_id"), 2, 9).cast("long"), lit(4L)),
+      Canonicalize.aliasPairs(spark, passages),
+      Canonicalize.coocMergeEdges(mentions))
       ._1.collect()
       .map(r => r.getString(0) ->
         ((r.getAs[Long]("books_appeared"), r.getAs[Long]("type_conflicts"))))

@@ -2,6 +2,7 @@ package graft.extract
 
 import graft.{Lexicon, SparkSpec}
 import graft.cc.ConnectedComponents
+import graft.graph.StageStore
 import org.apache.spark.sql.functions._
 
 class CanonicalizeSpec extends SparkSpec {
@@ -115,14 +116,16 @@ class CanonicalizeSpec extends SparkSpec {
     import spark.implicits._
     val nodes = Seq("a", "b", "c", "d", "e", "f").toDF("node")
     val edges = Seq(("c", "b"), ("b", "a"), ("e", "d")).toDF("src", "dst")
-    val (assign, steps) = ConnectedComponents.run(spark, nodes, edges)
+    val (assign, steps) =
+      ConnectedComponents.run(spark, nodes, edges, StageStore.Local)
     val m = assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m == Map("a" -> "a", "b" -> "a", "c" -> "a",
       "d" -> "d", "e" -> "d", "f" -> "f"))
     assert(steps.last.changed == 0)
     // reversed edge orientation must give the same result
     val edges2 = Seq(("a", "b"), ("b", "c"), ("d", "e")).toDF("src", "dst")
-    val (assign2, _) = ConnectedComponents.run(spark, nodes, edges2)
+    val (assign2, _) =
+      ConnectedComponents.run(spark, nodes, edges2, StageStore.Local)
     val m2 = assign2.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m2 == m)
   }
@@ -136,7 +139,8 @@ class CanonicalizeSpec extends SparkSpec {
     val names = (0 to 1024).map(i => f"n$i%05d")
     val nodes = names.toDF("node")
     val edges = names.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst")
-    val (assign, steps) = ConnectedComponents.run(spark, nodes, edges)
+    val (assign, steps) =
+      ConnectedComponents.run(spark, nodes, edges, StageStore.Local)
     // log2(1024) halving steps + one final no-change detection step
     assert(steps.size <= 12, s"took ${steps.size} supersteps")
     val clusters = assign.select("cluster").distinct().as[String].collect()
@@ -166,7 +170,7 @@ class CanonicalizeSpec extends SparkSpec {
       val expected = nodes.groupBy(find).values
         .flatMap(g => g.map(_ -> g.min)).toMap
       val (assign, _) = ConnectedComponents.run(spark,
-        nodes.toDF("node"), edges.toDF("src", "dst"))
+        nodes.toDF("node"), edges.toDF("src", "dst"), StageStore.Local)
       val got = assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(got == expected, s"trial $trial (n=$n, e=${edges.size})")
     }
@@ -177,7 +181,8 @@ class CanonicalizeSpec extends SparkSpec {
     val nodes = Seq("a", "b").toDF("node")
     val edges = Seq(("a", "b")).toDF("src", "dst")
     val e = intercept[IllegalStateException] {
-      ConnectedComponents.run(spark, nodes, edges, maxIter = 0)
+      ConnectedComponents.run(spark, nodes, edges, StageStore.Local,
+        maxIter = 0)
     }
     assert(e.getMessage.contains("raise maxIter"))
   }
@@ -186,7 +191,7 @@ class CanonicalizeSpec extends SparkSpec {
     import spark.implicits._
     val empty = Seq.empty[(String, String)].toDF("src", "dst")
     val (assign, steps) = ConnectedComponents.run(spark,
-      Seq.empty[String].toDF("node"), empty)
+      Seq.empty[String].toDF("node"), empty, StageStore.Local)
     assert(assign.count() == 0)
     assert(steps.head.changed == 0) // fused metrics must not NPE on NULL sum
   }
@@ -252,6 +257,20 @@ class CanonicalizeSpec extends SparkSpec {
     assert(got == Set(("aaron", "aaron took"), ("mirkwood", "the mirkwood")))
   }
 
+  test("clusters over inline alias and cooc edges == Pipeline.clusterAssignment") {
+    val sf = "/root/testdata/sf0.001"
+    val txt = graft.Pipeline.textual(spark, sf)
+    // raw detected mentions, without the stage's stored key: the node keys
+    // and the co-occurrence pairs derive from the text
+    val m = Mentions.fromPassages(spark, txt).toDF()
+    val (got, steps) = Canonicalize.clusters(spark, m,
+      Canonicalize.aliasPairs(spark, txt), Canonicalize.coocMergeEdges(m),
+      StageStore.Local)
+    val want = graft.Pipeline.clusterAssignment(spark, sf)
+    assert(got.count() > 0 && steps.last.changed == 0)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
   test("two-level registry aggregate == single-level (round-6 optimization " +
     "equivalence)") {
     import spark.implicits._
@@ -264,7 +283,8 @@ class CanonicalizeSpec extends SparkSpec {
     val assignment = Seq(
       ("frodo", "c1"), ("frodo baggins", "c1"),
       ("sam", "c2"), ("samwise", "c2")).toDF("node", "cluster")
-    val got = Canonicalize.registry(spark, mentions, assignment)
+    val got = Canonicalize.registryFromNodes(
+      Canonicalize.registryNodes(mentions, assignment))
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getLong(2), r.getLong(3))).toSet
     // naive single-level form (the pre-optimization aggregate)

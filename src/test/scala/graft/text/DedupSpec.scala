@@ -10,6 +10,7 @@ class DedupSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
   }
 
+
   private val base = "the quick brown fox jumps over the lazy dog " +
     "and runs far away into the deep dark forest tonight"
   private val nearDup = base.replace("tonight", "today") // 1-word change
@@ -18,14 +19,14 @@ class DedupSpec extends SparkSpec {
 
   test("minhash LSH finds the near-dup pair, not the unrelated one") {
     val docs = docsDf(1L -> base, 2L -> nearDup, 3L -> unrelated)
-    val pairs = Dedup.minhashNearDups(spark, docs, "doc_id", "text")
+    val pairs = Dedup.minhashNearDups(spark, Dedup.shingleTable(docs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)))
   }
 
   test("minhash identical docs have jaccard 1.0") {
     val docs = docsDf(1L -> base, 2L -> base)
-    val rows = Dedup.minhashNearDups(spark, docs, "doc_id", "text").collect()
+    val rows = Dedup.minhashNearDups(spark, Dedup.shingleTable(docs)).collect()
     assert(rows.length == 1 && rows(0).getDouble(2) == 1.0)
   }
 
